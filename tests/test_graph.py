@@ -9,6 +9,7 @@ pinned explicitly.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from tests.conftest import make_edges
 from twitter_followers_patterns_mapreduce_spark.operators import graph as G
@@ -549,3 +550,49 @@ def test_triangle_ivm_deletes_consistency_small(spark):
     assert row["t_after_raw"] == row["t_before_raw"] - row["t_lost_raw"]
     # the purge is non-trivial on this graph (some edge hashes to 0 mod 3)
     assert 0 < row["t_lost_raw"] <= 24
+
+
+def _tagged_graph(spark, seed: int, n: int = 12, p: float = 0.35, d_share: float = 0.3):
+    """Seeded random directed graph U tagged with a random delta D that
+    also holds every edge of two directed triangles, so |(D,D,D)| > 0."""
+    import random
+
+    rng = random.Random(seed)
+    whole = {(0, 1), (1, 2), (2, 0), (3, 4), (4, 5), (5, 3)}
+    edges = {(a, b) for a in range(n) for b in range(n) if a != b and rng.random() < p}
+    edges |= whole
+    rows = sorted((a, b, (a, b) in whole or rng.random() < d_share) for a, b in edges)
+    tagged = spark.createDataFrame(rows, "src LONG, dst LONG, in_d BOOLEAN")
+    return tagged.where("in_d").select("src", "dst"), tagged
+
+
+@pytest.mark.parametrize("seed", [3, 11])
+def test_delta_closures_equal_three_closure_counts(spark, seed):
+    """One tagged pass yields the same |DUU|, |DDU|, |DDD| as three
+    closure_count plans, and SUM(w) is their IVM combination."""
+    d, tagged = _tagged_graph(spark, seed)
+    u = tagged.select("src", "dst")
+    want = tuple(
+        one(G.closure_count(*rels)) for rels in ((d, u, u), (d, d, u), (d, d, d))
+    )
+    got = tuple(
+        G.delta_closures(d, tagged)
+        .selectExpr(
+            "COUNT(*)",
+            "COUNT_IF(f2)",
+            "COUNT_IF(f2 AND f3)",
+        )
+        .first()
+    )
+    assert got == want
+    assert want[2] > 0  # the delta holds whole triangles
+    a, b, c = want
+    assert one(G.delta_closure_sum(d, tagged)) == 3 * a - 3 * b + c
+
+
+def test_delta_closures_empty_delta(spark):
+    _, tagged = _tagged_graph(spark, 3)
+    u = tagged.withColumn("in_d", F.lit(False))
+    d = u.where("in_d").select("src", "dst")
+    assert G.delta_closures(d, u).count() == 0
+    assert G.delta_closure_sum(d, u).collect() == [(0,)]

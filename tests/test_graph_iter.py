@@ -61,6 +61,23 @@ def test_connected_components_string_ids(spark):
     }
 
 
+#: 12 fractional ids in [2.0, 2.2): every one rounds to 2 under a
+#: DECIMAL(38,0) cast, so a label sum cannot see any label move
+FRACTIONAL_IDS = [2.0 + i / 64 for i in range(12)]
+
+
+@pytest.mark.parametrize("id_type", ["DOUBLE", "DECIMAL(10,6)"])
+def test_connected_components_fractional_ids(spark, id_type):
+    # a 12-node chain needs 11 passes; a rounded-sum fingerprint stays
+    # at 24 from the first fold on and stopped after the second fold
+    # (9 passes), leaving the far end of the chain with a stale label
+    chain = spark.createDataFrame(
+        list(zip(FRACTIONAL_IDS, FRACTIONAL_IDS[1:])), "a DOUBLE, b DOUBLE"
+    ).selectExpr(f"CAST(a AS {id_type}) AS src", f"CAST(b AS {id_type}) AS dst")
+    r = {float(x["id"]): float(x["comp"]) for x in GI.connected_components(chain).collect()}
+    assert r == {i: 2.0 for i in FRACTIONAL_IDS}
+
+
 def test_connected_components_respects_max_iter_under_fold(spark):
     # max_iter bounds the TOTAL pass count, not the fold count: a
     # 12-node chain is not converged after 2 passes, and the fold loop
@@ -439,6 +456,18 @@ def test_scc_long_directed_cycle(spark):
     e = make_edges(spark, [(i, i % 12 + 1) for i in range(1, 13)])
     r = _scc_map(GI.strongly_connected_components(e))
     assert set(r.values()) == {1} and len(r) == 12
+
+
+def test_scc_long_cycle_fractional_ids(spark):
+    # one 12-node cycle over ids that all round to 2: the rounded
+    # (SUM(fmin), SUM(bmin)) fingerprint never moved, so propagation
+    # stopped early and split the cycle into several SCCs
+    ids = FRACTIONAL_IDS
+    e = spark.createDataFrame(
+        [(a, ids[(i + 1) % len(ids)]) for i, a in enumerate(ids)], "src DOUBLE, dst DOUBLE"
+    )
+    r = {float(k): float(v) for k, v in _scc_map(GI.strongly_connected_components(e)).items()}
+    assert r == {i: 2.0 for i in ids}
 
 
 def test_scc_chain_of_cycles_needs_peeling(spark):

@@ -13,6 +13,7 @@ import shutil
 import pytest
 
 from twitter_followers_patterns_mapreduce_spark.streaming.triangles import (
+    COUNT_TRI_SCHEMA,
     edges_tri_stream,
     triangle_view_from_state,
     triangles_apply_stream,
@@ -38,8 +39,12 @@ def _chunks(n_batches: int) -> list[list[tuple[int, int]]]:
     return out
 
 def _stage(spark, feed: str, n_batches: int, upto: int | None = None) -> str:
+    return _stage_chunks(spark, feed, _chunks(n_batches)[: upto if upto is not None else n_batches])
+
+
+def _stage_chunks(spark, feed: str, chunks: list[list[tuple[int, int]]]) -> str:
     os.makedirs(feed, exist_ok=True)
-    for b, chunk in enumerate(_chunks(n_batches)[: upto if upto is not None else n_batches]):
+    for b, chunk in enumerate(chunks):
         dst = os.path.join(feed, f"b{b}.parquet")
         if os.path.exists(dst):
             continue
@@ -91,6 +96,31 @@ def test_streamed_triangles_restart_resumes(spark, tmp_path):
         spark, edges_tri_stream(spark, feed), state, ckpt, batch_ids=ids2
     )
     assert ids2 == [2, 3]  # resumed, batches 0/1 NOT re-run
+    (row,) = triangle_view_from_state(spark, state).collect()
+    assert (row["t_raw"], row["n_edges"], row["consistent"]) == (
+        EXPECT_T_RAW,
+        EXPECT_N_EDGES,
+        True,
+    )
+
+
+def test_streamed_triangles_rearrival_only_batch(spark, tmp_path):
+    """A micro-batch of only re-arrivals has an empty D: the count is
+    carried over unchanged, and the batch still writes its own version."""
+    feed = _stage_chunks(spark, str(tmp_path / "feed"), [K4 + EXTRA, [(0, 1), (2, 3), (9, 9)]])
+    state = str(tmp_path / "state")
+    ids: list[int] = []
+    triangles_apply_stream(
+        spark, edges_tri_stream(spark, feed), state, str(tmp_path / "ckpt"), batch_ids=ids
+    )
+    assert ids == [0, 1]
+    for sub in ("edges", "count"):
+        assert os.path.exists(os.path.join(state, sub, "v=1", "_SUCCESS"))
+    t_raw = {
+        v: spark.read.schema(COUNT_TRI_SCHEMA).parquet(os.path.join(state, "count", f"v={v}")).first()[0]
+        for v in ids
+    }
+    assert t_raw == {0: EXPECT_T_RAW, 1: EXPECT_T_RAW}
     (row,) = triangle_view_from_state(spark, state).collect()
     assert (row["t_raw"], row["n_edges"], row["consistent"]) == (
         EXPECT_T_RAW,

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from twitter_followers_patterns_mapreduce_spark.functions.hashing import h64_sql
+from twitter_followers_patterns_mapreduce_spark.functions.prefix import spine_offsets
 from twitter_followers_patterns_mapreduce_spark.sources.readers import fan_out
 
 #: Reference compile-time constants (``countedges/CountEdgesAfterMax.java:34``,
@@ -1113,8 +1114,9 @@ SELECT 'transitive',
 def closure_count(s1: DataFrame, s2: DataFrame, s3: DataFrame) -> DataFrame:
     """1-row ``n``: raw directed closures a→b→c→a with a≠c, position 1/2/3
     drawn from ``s1``/``s2``/``s3`` — the reference's RS closure probe
-    (``rs/ReduceSideJoin.java``) parameterized over its input relations so
-    the IVM terms (batch and streamed) share one join pipeline."""
+    (``rs/ReduceSideJoin.java``) parameterized over its input relations —
+    the exact full recounts the IVM operators and the streamed view gate
+    against (the delta terms come from :func:`delta_closures`)."""
     p = (
         s1.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .join(s2.select(F.col("src").alias("b"), F.col("dst").alias("c")), "b")
@@ -1123,6 +1125,46 @@ def closure_count(s1: DataFrame, s2: DataFrame, s3: DataFrame) -> DataFrame:
     return p.join(
         s3.select(F.col("src").alias("c"), F.col("dst").alias("a")), ["c", "a"]
     ).agg(F.count("*").cast("long").alias("n"))
+
+
+def delta_closures(d: DataFrame, u: DataFrame) -> DataFrame:
+    """The three insert/delete IVM delta terms as ONE join pipeline:
+    every raw closure a→b→c→a (a≠c) whose first edge is in ``d``,
+    second and third edges drawn from ``u`` (src, dst, in_d) — ``u``
+    must contain ``d`` and tag those rows ``in_d``.  Returns one row
+    per closure with ``f2``/``f3`` (edge 2/3 is in D), so
+
+        |(D,U,U)| = COUNT(*),  |(D,D,U)| = COUNT_IF(f2),
+        |(D,D,D)| = COUNT_IF(f2 AND f3),
+
+    and its weight ``w`` = 3 − 3·f2 + (f2∧f3), so ``SUM(w)`` is the IVM
+    delta 3·|DUU| − 3·|DDU| + |DDD|.  Two joins and no aggregate where
+    three :func:`closure_count` plans cost six joins and three
+    aggregates; every row still starts from a delta edge."""
+    p = (
+        d.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .join(
+            u.select(
+                F.col("src").alias("b"), F.col("dst").alias("c"), F.col("in_d").alias("f2")
+            ),
+            "b",
+        )
+        .where(F.col("a") != F.col("c"))
+    )
+    return p.join(
+        u.select(F.col("src").alias("c"), F.col("dst").alias("a"), F.col("in_d").alias("f3")),
+        ["c", "a"],
+    ).selectExpr(
+        "f2", "f3", "CAST(3 - 3 * CAST(f2 AS INT) + CAST(f2 AND f3 AS INT) AS BIGINT) AS w"
+    )
+
+
+def delta_closure_sum(d: DataFrame, u: DataFrame) -> DataFrame:
+    """1-row ``n``: the IVM delta 3·|DUU| − 3·|DDU| + |DDD| as
+    ``SUM(w)`` over :func:`delta_closures` (0 on an empty delta)."""
+    return delta_closures(d, u).agg(
+        F.expr("CAST(coalesce(SUM(w), 0) AS BIGINT)").alias("n")
+    )
 
 
 def triangle_count_ivm(
@@ -1142,44 +1184,45 @@ def triangle_count_ivm(
 
         added = 3·|(D,U,U)| − 3·|(D,D,U)| + |(D,D,D)|,  U = E ∪ D
 
-    Every term STARTS from a delta edge, so the joins are |D|·deg-
-    driven — at 100 TB the base graph is touched only through the
-    equi-joins the delta probes, which is the whole point of IVM.
-    ``t_total_raw`` is recomputed exactly as the gate companion (the
-    sketch-op discipline: the consistency boolean
+    All three terms come from ONE tagged pass (:func:`delta_closures`):
+    closures starting from a delta edge, joined twice against U whose
+    rows carry the split predicate as the ``in_d`` flag, summed by
+    closure weight.  Every row starts from a delta edge, so the
+    joins are |D|·deg-driven — at 100 TB the base graph is touched only
+    through the equi-joins the delta probes, which is the whole point
+    of IVM.  ``t_total_raw`` is recomputed exactly as the gate companion
+    (the sketch-op discipline: the consistency boolean
     ``t_base_raw + t_added_raw == t_total_raw`` is what the oracle
     pins; production omits the recount).
 
     Output (1 row): t_base_raw, t_added_raw, t_total_raw, consistent.
     """
+    h = h64_sql("concat(cast(src as string), ',', cast(dst as string))", "spark")
     u = (
         filter_max(edges, max_limit)
         .where(F.col("src") != F.col("dst"))
         .select("src", "dst")
         .distinct()
+        .withColumn("in_d", F.expr(f"({h}) % {delta_mod} = 0"))
         .localCheckpoint(eager=False)
     )
-    h = h64_sql("concat(cast(src as string), ',', cast(dst as string))", "spark")
-    d = u.where(F.expr(f"({h}) % {delta_mod} = 0")).localCheckpoint(eager=False)
-    e = u.where(F.expr(f"({h}) % {delta_mod} <> 0"))
-
-    closures = closure_count
+    d = u.where("in_d")
+    e = u.where("NOT in_d")
 
     # n - n: data-derived zero keys — a foldable literal would collapse
     # the equi-joins below into nested-loop crosses (the bm25 glob trick)
-    base = closures(e, e, e).selectExpr("n AS t_base_raw", "n - n AS _k")
-    a_duu = closures(d, u, u).selectExpr("n AS a_duu", "n - n AS _k")
-    b_ddu = closures(d, d, u).selectExpr("n AS b_ddu", "n - n AS _k")
-    c_ddd = closures(d, d, d).selectExpr("n AS c_ddd", "n - n AS _k")
-    total = closures(u, u, u).selectExpr("n AS t_total_raw", "n - n AS _k")
-    out = base
-    for piece in (a_duu, b_ddu, c_ddd, total):
-        out = out.join(F.broadcast(piece), "_k")
-    return out.selectExpr(
-        "t_base_raw",
-        "CAST(3 * a_duu - 3 * b_ddu + c_ddd AS BIGINT) AS t_added_raw",
-        "t_total_raw",
-        "(t_base_raw + (3 * a_duu - 3 * b_ddu + c_ddd)) = t_total_raw AS consistent",
+    base = closure_count(e, e, e).selectExpr("n AS t_base_raw", "n - n AS _k")
+    added = delta_closure_sum(d, u).selectExpr("n AS t_added_raw", "n - n AS _k")
+    total = closure_count(u, u, u).selectExpr("n AS t_total_raw", "n - n AS _k")
+    return (
+        base.join(F.broadcast(added), "_k")
+        .join(F.broadcast(total), "_k")
+        .selectExpr(
+            "t_base_raw",
+            "t_added_raw",
+            "t_total_raw",
+            "t_base_raw + t_added_raw = t_total_raw AS consistent",
+        )
     )
 
 
@@ -1306,26 +1349,10 @@ def negative_samples(
     hb = h64_sql("cast(id as string)", "spark")
     bucketed = nodes.selectExpr("id AS v", f"({hb}) % {B} AS bkt")
     w_in = Window.partitionBy("bkt").orderBy(F.col("v").asc())
-    # exclusive prefix sum of bucket sizes WITHOUT any unpartitioned
-    # window and without a driver collect: aggregate the ≤B-row size
-    # spine into one sorted array, run the O(B²)-expression running
-    # sum inside transform/aggregate (32k int adds on a single row —
-    # free), explode back to ≤B rows, broadcast.  Stays one lazy DAG;
-    # zero "No Partition Defined" windows anywhere in this plan.
-    offs = (
-        bucketed.groupBy("bkt")
-        .agg(F.count("*").alias("bn"))
-        .agg(F.sort_array(F.collect_list(F.struct("bkt", "bn"))).alias("arr"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(arr, (x, i) -> struct(x.bkt AS bkt, "
-                    "aggregate(slice(arr, 1, i), CAST(0 AS BIGINT), "
-                    "(a, y) -> a + y.bn) AS off))"
-                )
-            ).alias("o")
-        )
-        .select("o.bkt", "o.off")
+    # exclusive prefix sum of bucket sizes over the ≤B-row spine, with
+    # no unpartitioned window and no driver collect
+    offs = spine_offsets(
+        bucketed.groupBy("bkt").agg(F.count("*").alias("bn")), "bkt", "bn", "off"
     )
     indexed = (
         bucketed.withColumn("rn", F.row_number().over(w_in))
@@ -1411,39 +1438,40 @@ def triangle_count_ivm_deletes(
 
     — the same rotation-symmetry + inclusion-exclusion algebra as the
     insert case (:func:`triangle_count_ivm`), evaluated against U
-    instead of the post-change graph, so every join is |D|·deg-driven
-    and the surviving graph is never recounted.  The exact recount of
-    the post-deletion graph is the gate companion
-    (``t_before_raw − t_lost_raw == t_after_raw``); production omits
-    it.  Output (1 row): t_before_raw, t_lost_raw, t_after_raw,
-    consistent.
+    instead of the post-change graph, in the same single tagged pass
+    (:func:`delta_closures`, the purge predicate as U's ``in_d``
+    flag), so every join is |D|·deg-driven and the surviving graph is
+    never recounted.  The exact recount of the post-deletion graph is
+    the gate companion (``t_before_raw − t_lost_raw == t_after_raw``);
+    production omits it.  Output (1 row): t_before_raw, t_lost_raw,
+    t_after_raw, consistent.
     """
+    h = h64_sql("concat(cast(src as string), ',', cast(dst as string))", "spark")
     u = (
         filter_max(edges, max_limit)
         .where(F.col("src") != F.col("dst"))
         .select("src", "dst")
         .distinct()
+        .withColumn("in_d", F.expr(f"({h}) % {delete_mod} = 0"))
         .localCheckpoint(eager=False)
     )
-    h = h64_sql("concat(cast(src as string), ',', cast(dst as string))", "spark")
-    d = u.where(F.expr(f"({h}) % {delete_mod} = 0")).localCheckpoint(eager=False)
-    kept = u.where(F.expr(f"({h}) % {delete_mod} <> 0"))
+    d = u.where("in_d")
+    kept = u.where("NOT in_d")
 
     before = closure_count(u, u, u).selectExpr("n AS t_before_raw", "n - n AS _k")
-    a_duu = closure_count(d, u, u).selectExpr("n AS a_duu", "n - n AS _k")
-    b_ddu = closure_count(d, d, u).selectExpr("n AS b_ddu", "n - n AS _k")
-    c_ddd = closure_count(d, d, d).selectExpr("n AS c_ddd", "n - n AS _k")
+    lost = delta_closure_sum(d, u).selectExpr("n AS t_lost_raw", "n - n AS _k")
     after = closure_count(kept, kept, kept).selectExpr(
         "n AS t_after_raw", "n - n AS _k"
     )
-    out = before
-    for piece in (a_duu, b_ddu, c_ddd, after):
-        out = out.join(F.broadcast(piece), "_k")
-    return out.selectExpr(
-        "t_before_raw",
-        "CAST(3 * a_duu - 3 * b_ddu + c_ddd AS BIGINT) AS t_lost_raw",
-        "t_after_raw",
-        "(t_before_raw - (3 * a_duu - 3 * b_ddu + c_ddd)) = t_after_raw AS consistent",
+    return (
+        before.join(F.broadcast(lost), "_k")
+        .join(F.broadcast(after), "_k")
+        .selectExpr(
+            "t_before_raw",
+            "t_lost_raw",
+            "t_after_raw",
+            "t_before_raw - t_lost_raw = t_after_raw AS consistent",
+        )
     )
 
 

@@ -33,6 +33,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import re
 import warnings
 
 from pyspark.sql import DataFrame
@@ -101,6 +102,17 @@ def _ckpt(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
+def _integral(dtype: str) -> bool:
+    """True iff labels of Spark type ``dtype`` are whole numbers, so an
+    exact DECIMAL(38,0) label sum is a faithful convergence fingerprint.
+    Float, double and fractional-decimal labels are not: the cast rounds
+    2.4 and 2.2 alike, so a moved label can leave the sum unchanged and
+    stop the loop early — they take the hash fingerprint instead."""
+    return dtype in ("tinyint", "smallint", "int", "bigint") or bool(
+        re.fullmatch(r"decimal\(\d+,0\)", dtype)
+    )
+
+
 def connected_components(edges: DataFrame, max_iter: int = 50, fold: int = 4) -> DataFrame:
     """Undirected connected components by hash-min label propagation:
     every node's label converges to the minimum node id reachable from
@@ -124,10 +136,12 @@ def connected_components(edges: DataFrame, max_iter: int = 50, fold: int = 4) ->
       * labels are pointwise non-increasing, so ``SUM(comp)`` is
         strictly decreasing until convergence: an unchanged sum across
         a fold ⟺ no label moved in that fold (exact DECIMAL(38,0)
-        sum — no hash-collision caveat).  Non-numeric node ids (the
-        collocation/dedup text graphs propagate STRING labels) use the
-        ``connected_components_twostar`` fingerprint instead —
-        (count, Σ xxhash64(id, comp)) — same 2⁻⁶⁴ collision discipline.
+        sum of integral labels — no hash-collision caveat).  Other
+        node ids (the collocation/dedup text graphs propagate STRING
+        labels; float/double/fractional-decimal ids would round in
+        the sum) use the ``connected_components_twostar`` fingerprint
+        instead — (count, Σ xxhash64(id, comp)) — same 2⁻⁶⁴ collision
+        discipline.
 
     The propagation table carries explicit self-loops so a pass
     references ``comp`` ONCE (``min over N(v) ∪ {v}``) — the k folded
@@ -160,10 +174,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50, fold: int = 4) ->
         .transform(_ckpt)
     )
 
-    numeric_ids = dict(comp.dtypes)["comp"] in (
-        "tinyint", "smallint", "int", "bigint", "decimal", "float", "double"
-    ) or dict(comp.dtypes)["comp"].startswith("decimal")
-    if numeric_ids:
+    if _integral(dict(comp.dtypes)["comp"]):
         fp_aggs = [F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")]
     else:
         fp_aggs = [
@@ -1374,15 +1385,12 @@ def strongly_connected_components(
         lab = nodes.select(
             "id", F.col("id").alias("fmin"), F.col("id").alias("bmin")
         ).transform(_ckpt)
-        numeric_ids = dict(lab.dtypes)["fmin"] in (
-            "tinyint", "smallint", "int", "bigint", "float", "double"
-        ) or dict(lab.dtypes)["fmin"].startswith("decimal")
-        if numeric_ids:
+        if _integral(dict(lab.dtypes)["fmin"]):
             fp_aggs = [
                 F.sum(F.col("fmin").cast("decimal(38,0)")).alias("sf"),
                 F.sum(F.col("bmin").cast("decimal(38,0)")).alias("sb"),
             ]
-        else:  # string ids: the twostar hash-fingerprint discipline
+        else:  # non-integral ids: the twostar hash-fingerprint discipline
             fp_aggs = [
                 F.count("*").alias("n"),
                 F.sum(F.xxhash64("id", "fmin", "bmin").cast("decimal(38,0)")).alias("h"),

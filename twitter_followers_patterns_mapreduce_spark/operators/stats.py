@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from twitter_followers_patterns_mapreduce_spark.functions.prefix import spine_offsets
+
 DEC = "decimal(18,6)"
 
 #: fixed histogram bucket width for l_extendedprice (range ≈ 900..110k)
@@ -170,6 +172,10 @@ FROM events GROUP BY event_type"""
 #: oracle so both engines evaluate identical text)
 _KLL_PROBES = (0.25, 0.5, 0.75, 0.9, 0.99)
 
+#: Bucket count of :func:`_counted_quantiles`' two-level prefix sum —
+#: the carry-in runs over this constant-sized bucket spine.
+QUANTILE_BUCKETS = 256
+
 
 def _counted_quantiles(vals: DataFrame, probes: tuple[float, ...]) -> DataFrame:
     """Exact quantiles BIT-IDENTICAL to ``percentile(x, array(...), f)``
@@ -192,19 +198,52 @@ def _counted_quantiles(vals: DataFrame, probes: tuple[float, ...]) -> DataFrame:
     on tie-heavy/singleton/uniform synthetics and the sf0.1 price
     domain.  NULL values count toward ``n_all`` (the COUNT(*)
     companion) but not toward ranks, exactly like ``percentile``.
+
+    The cumulative count is a DISTRIBUTED TWO-LEVEL PREFIX SUM (the
+    ``events_concurrency_curve`` decomposition): values fall into
+    ≤ ``QUANTILE_BUCKETS`` order-preserving range buckets over
+    [min, max] (IEEE subtract/divide/multiply by constants and floor
+    are monotone, so x ≤ y ⇒ bkt(x) ≤ bkt(y)); the running count is a
+    within-bucket window partitioned by bucket plus a carry-in — the
+    exclusive prefix of bucket totals over the ≤B-row spine
+    (:func:`~twitter_followers_patterns_mapreduce_spark.functions.prefix.spine_offsets`),
+    so no window in the plan is unpartitioned.  Counts are exact
+    integers, so ``cum`` equals the single global running sum.  A
+    NaN/infinite range puts every value in bucket 0 (still exact).
     Returns ONE row: (n_all BIGINT, ex ARRAY<DOUBLE> in probe order).
     """
     from pyspark.sql import Window
 
+    B = QUANTILE_BUCKETS
     counted = vals.groupBy("x").agg(F.count("*").alias("f"))
-    nn_rows = counted.where(F.col("x").isNotNull())
-    w = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
-    cum = nn_rows.withColumn("cum", F.sum("f").over(w))
     tot = counted.agg(
         F.expr("CAST(coalesce(SUM(f), 0) AS BIGINT)").alias("n_all"),
         F.expr("SUM(CASE WHEN x IS NOT NULL THEN f END)").alias("nn"),
+        F.min("x").alias("x_lo"),
+        F.max("x").alias("x_hi"),
     )
-    c2 = cum.crossJoin(F.broadcast(tot))
+    span = "(x_hi - x_lo)"
+    bucketed = (
+        counted.where(F.col("x").isNotNull())
+        .crossJoin(F.broadcast(tot))
+        .withColumn(
+            "bkt",
+            F.expr(
+                f"CASE WHEN {span} > 0 AND {span} < CAST('Infinity' AS DOUBLE) "
+                f"THEN least({B - 1}, CAST(floor((x - x_lo) / {span} * {B}) AS INT)) "
+                "ELSE 0 END"
+            ),
+        )
+    )
+    w_in = Window.partitionBy("bkt").orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
+    carry = spine_offsets(
+        bucketed.groupBy("bkt").agg(F.sum("f").alias("bf")), "bkt", "bf", "carry_in"
+    )
+    c2 = (
+        bucketed.withColumn("run", F.sum("f").over(w_in))
+        .join(F.broadcast(carry), "bkt")
+        .withColumn("cum", F.col("carry_in") + F.col("run"))
+    )
     aggs = []
     for i, q in enumerate(probes):
         pos = f"CAST({q!r} AS DOUBLE) * (nn - 1)"

@@ -65,7 +65,9 @@ def bottomk_apply_stream(
             delta
             if prev is None
             # mergeable: bottom-k of (previous state union batch bottom-k)
-            else _bottomk(spark.read.parquet(f"{state_dir}/v={prev}").unionAll(delta), k)
+            else _bottomk(
+                spark.read.schema(delta.schema).parquet(f"{state_dir}/v={prev}").unionAll(delta), k
+            )
         )
         out.write.mode("overwrite").parquet(f"{state_dir}/v={batch_id}")
         _prune_versions(state_dir)

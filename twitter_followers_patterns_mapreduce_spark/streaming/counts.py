@@ -80,7 +80,7 @@ def counts_apply_stream(
             delta
             if prev is None
             else merge_user_counts(
-                spark.read.parquet(f"{state_dir}/v={prev}"), delta
+                spark.read.schema(delta.schema).parquet(f"{state_dir}/v={prev}"), delta
             )
         )
         out.write.mode("overwrite").parquet(f"{state_dir}/v={batch_id}")

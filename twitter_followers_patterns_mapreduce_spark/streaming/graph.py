@@ -94,8 +94,10 @@ def maintain_degrees_foreach_batch(
         # — that replay is exactly what makes the version idempotent
         prev = _latest_version(view_path, below=batch_id)
         delta = degrees(batch)
+        # every version was written with the delta's schema: reading with
+        # it skips one parquet-footer inference job per micro-batch
         out = delta if prev is None else merge_degrees(
-            spark.read.parquet(f"{view_path}/v={prev}"), delta
+            spark.read.schema(delta.schema).parquet(f"{view_path}/v={prev}"), delta
         )
         out.write.mode("overwrite").parquet(f"{view_path}/v={batch_id}")
         _prune_versions(view_path)

@@ -12,13 +12,19 @@ standing two-table state:
 * ``edges/v=<id>``  — the accumulated DISTINCT edge set (the graph),
 * ``count/v=<id>``  — ONE row ``t_raw``: the maintained closure count.
 
-Per-batch cost is |D|·deg-driven equi-joins against the standing edge
-set plus an |old ∪ D| rewrite of the edge state — the base graph's
-closures are never recounted.  (The full-state parquet rewrite per
-version is the documented vanilla-Spark stand-in for a table-format
-MERGE, as in ``streaming/dedup_admit.py``.)  Cross-batch duplicate
-arrivals are admitted exactly once: each batch left-anti-joins its
-edges against the standing set before counting, so D is genuinely new.
+Per batch: one anti-join (dedup vs the standing set) fixes D; ONE
+tagged delta-closure pass (``operators/graph.py::delta_closures``)
+joins D twice against U = old ∪ D, whose rows carry an "edge is in D"
+flag, and weighs each closure 3 − 3·f2 + (f2∧f3).  The new count is a
+single SUM over the old ``t_raw`` row and those weighted closure rows,
+so the count write is one join pipeline and one aggregate — the base
+graph's closures are never recounted.  The edge state is rewritten as
+|old ∪ D| beside it (the full-state parquet rewrite per version is the
+documented vanilla-Spark stand-in for a table-format MERGE, as in
+``streaming/dedup_admit.py``).  Cross-batch duplicate arrivals are
+admitted exactly once: the anti-join makes D genuinely new.  State is
+read with explicit schemas, so no version read pays a parquet-footer
+schema-inference job.
 
 Order-independence gate: the final edge state is a SET (union is
 commutative) and the maintained count is exact at every step, so the
@@ -44,14 +50,19 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from twitter_followers_patterns_mapreduce_spark.operators.graph import closure_count
+from twitter_followers_patterns_mapreduce_spark.operators.graph import (
+    closure_count,
+    delta_closures,
+)
 from twitter_followers_patterns_mapreduce_spark.streaming.graph import (
     _latest_version,
     _prune_versions,
 )
 
-#: Schema of staged edge-feed files.
+#: Schema of staged edge-feed files and of the ``edges/v=`` state.
 EDGE_TRI_SCHEMA = "src LONG, dst LONG"
+#: Schema of the ``count/v=`` state.
+COUNT_TRI_SCHEMA = "t_raw LONG"
 
 
 def edges_tri_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -78,8 +89,9 @@ def triangles_apply_stream(
 ) -> None:
     """Drain ``stream`` (availableNow) into the versioned edge-set +
     count state: per batch, one anti-join (dedup vs the standing set),
-    three delta closure joins, and two independent state writes
-    (submitted in parallel threads).  Blocks until drained."""
+    one tagged delta-closure pass folded with the old count into one
+    SUM, and two independent state writes (submitted in parallel
+    threads).  Blocks until drained."""
     edges_dir = os.path.join(state_dir, "edges")
     count_dir = os.path.join(state_dir, "count")
 
@@ -94,31 +106,28 @@ def triangles_apply_stream(
         prev = _latest_version(edges_dir, below=batch_id)
         if prev is None:
             old_edges = _empty_edges(spark)
-            old_count = spark.range(1).selectExpr(
-                "CAST(0 AS BIGINT) AS t_raw", "CAST(id AS BIGINT) AS _k"
-            )
+            old_count = spark.range(1).selectExpr("CAST(0 AS BIGINT) AS t_raw")
         else:
-            old_edges = spark.read.parquet(f"{edges_dir}/v={prev}")
-            old_count = spark.read.parquet(
+            old_edges = spark.read.schema(EDGE_TRI_SCHEMA).parquet(f"{edges_dir}/v={prev}")
+            old_count = spark.read.schema(COUNT_TRI_SCHEMA).parquet(
                 f"{count_dir}/v={_latest_version(count_dir, below=batch_id)}"
-            ).selectExpr("t_raw", "t_raw - t_raw AS _k")
+            )
         # only genuinely-new edges count (and re-arrivals are no-ops);
-        # lazy checkpoint: D feeds three closure terms + the union write
+        # lazy checkpoint: D feeds the closure pass, U's tag and the
+        # union write
         d = b.join(old_edges, ["src", "dst"], "left_anti").localCheckpoint(
             eager=False
         )
         u = old_edges.unionByName(d)
-
-        # n - n: data-derived zero keys (a foldable literal would turn
-        # the 1-row combiner equi-joins below into nested-loop crosses)
-        a_duu = closure_count(d, u, u).selectExpr("n AS a_duu", "n - n AS _k")
-        b_ddu = closure_count(d, d, u).selectExpr("n AS b_ddu", "n - n AS _k")
-        c_ddd = closure_count(d, d, d).selectExpr("n AS c_ddd", "n - n AS _k")
-        new_count = old_count
-        for piece in (a_duu, b_ddu, c_ddd):
-            new_count = new_count.join(F.broadcast(piece), "_k")
-        new_count = new_count.selectExpr(
-            "CAST(t_raw + 3 * a_duu - 3 * b_ddu + c_ddd AS BIGINT) AS t_raw"
+        tagged = old_edges.withColumn("in_d", F.lit(False)).unionByName(
+            d.withColumn("in_d", F.lit(True))
+        )
+        # t_raw' = t_raw + Σ closure weights: the old count is one more
+        # weighted row of the same SUM
+        new_count = (
+            old_count.select(F.col("t_raw").alias("w"))
+            .unionByName(delta_closures(d, tagged).select("w"))
+            .agg(F.sum("w").cast("long").alias("t_raw"))
         )
 
         # the two versioned writes are independent once D is fixed —
@@ -157,8 +166,8 @@ def triangle_view_from_state(spark: SparkSession, state_dir: str) -> DataFrame:
     vc = _latest_version(count_dir)
     if ve is None or vc is None:
         raise FileNotFoundError(f"no triangle state at {state_dir}")
-    edges = spark.read.parquet(f"{edges_dir}/v={ve}")
-    maintained = spark.read.parquet(f"{count_dir}/v={vc}").selectExpr(
+    edges = spark.read.schema(EDGE_TRI_SCHEMA).parquet(f"{edges_dir}/v={ve}")
+    maintained = spark.read.schema(COUNT_TRI_SCHEMA).parquet(f"{count_dir}/v={vc}").selectExpr(
         "t_raw", "t_raw - t_raw AS _k"
     )
     recount = closure_count(edges, edges, edges).selectExpr(
