@@ -39,6 +39,22 @@ def test_cli_jobs_print_reference_goldens(spark, edges_csv, tmp_path, capsys, jo
     assert spark.read.parquet(out).count() >= 1
 
 
+@pytest.mark.parametrize(
+    "flags,expected",
+    [
+        ([], "16"),
+        # --max 6 drops every edge touching node 6: 1-2 2-3 3-1 1-4 4-5 2-5 5-3
+        # leave Σ indeg·outdeg = 2+2+2+1+2 = 9 (round-trips included, as in EX)
+        (["--max", "6"], "9"),
+    ],
+)
+def test_cli_exact_2hop_max_filter(spark, edges_csv, tmp_path, capsys, flags, expected):
+    out = str(tmp_path / "out_ex")
+    assert main(["exact-2hop", edges_csv, out, *flags]) == 0
+    assert capsys.readouterr().out.strip() == expected
+    assert spark.read.parquet(out).collect()[0][0] == int(expected)
+
+
 def test_cli_query_job_runs_registered_query(spark, tmp_path, capsys):
     out = str(tmp_path / "out_query")
     assert main(["query", "/root/testdata/sf0.001", out, "--name", "degrees"]) == 0

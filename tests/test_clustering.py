@@ -214,6 +214,20 @@ def test_logreg_fit_matches_numpy_gd(spark):
     assert abs(got[-1] - np.floor(b * 1e6) / 1e6) <= 2e-6
 
 
+def test_logreg_fit_term_overflow_raises(spark):
+    # at w = 0 every residual is ±0.5, so x = 2e7 makes |x·r| = 1e7, past
+    # the ~9.22e6 BIGINT bound of the q12 grid: the ANSI session must
+    # raise, never return weights that silently dropped the term
+    from pyspark.errors import ArithmeticException
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 2e7], 0), (1, [-1.0, 0.5], 1)],
+        schema="vec_id long, embedding array<double>, label long",
+    )
+    with pytest.raises(ArithmeticException, match="CAST_OVERFLOW"):
+        KM.logreg_fit(emb, target_label=0, iters=1, lr=0.5)
+
+
 def test_logreg_eval_auc_matches_direct_computation(spark):
     import numpy as np
 

@@ -6,6 +6,8 @@ must reproduce the §2.9 goldens (CE=10, EX=16, RS raw=6).
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from twitter_followers_patterns_mapreduce_spark.operators import graph as G
 from twitter_followers_patterns_mapreduce_spark.sources.readers import (
     edges_from_csv,
@@ -247,3 +249,118 @@ def test_fan_out_falls_back_for_fileless_frames(spark):
     df = spark.createDataFrame([(1,), (2,)], "x LONG")
     out = fan_out(df, 4)
     assert out is not df
+
+
+# ---------------------------------------------------------------------------
+# Staged edge table: one parse per session, exact invalidation
+# ---------------------------------------------------------------------------
+
+
+def _duck_edges(pattern: str) -> list[tuple[int, int]]:
+    """The input's edges as a fresh DuckDB read sees them right now."""
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        return sorted(
+            con.sql(
+                f"SELECT src, dst FROM read_csv('{pattern}', header=false,"
+                " columns={'src': 'BIGINT', 'dst': 'BIGINT'})"
+            ).fetchall()
+        )
+    finally:
+        con.close()
+
+
+def _edges(df) -> list[tuple[int, int]]:
+    return sorted((r["src"], r["dst"]) for r in df.collect())
+
+
+def _staged_files() -> set[str]:
+    """Every file under the context's SparkFiles root (where copies live)."""
+    import os
+
+    from pyspark import SparkFiles
+
+    root = SparkFiles.getRootDirectory()
+    return {os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs}
+
+
+def _bump_mtime(path) -> None:
+    import os
+
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 5_000_000_000))
+
+
+def test_staged_edges_same_size_rewrite_restages(spark, tmp_path):
+    p = tmp_path / "edges.csv"
+    p.write_text("1,2\n2,3\n3,1\n")
+    assert _edges(edges_from_csv(spark, str(p))) == _duck_edges(str(p))
+    p.write_text("1,2\n2,3\n3,4\n")  # same size, different content
+    _bump_mtime(p)
+    got = _edges(edges_from_csv(spark, str(p)))
+    assert got == _duck_edges(str(p)) == [(1, 2), (2, 3), (3, 4)]
+
+
+def test_staged_edges_different_size_rewrite_restages(spark, tmp_path):
+    p = tmp_path / "edges.csv"
+    p.write_text("1,2\n2,3\n")
+    assert one(G.count_edges(edges_from_csv(spark, str(p)), None)) == 2
+    p.write_text("1,2\n2,3\n3,1\n4,1\n")
+    got = edges_from_csv(spark, str(p))
+    assert _edges(got) == _duck_edges(str(p))
+    assert one(G.count_edges(got, None)) == 4
+
+
+def test_staged_edges_file_added_to_directory_restages(spark, tmp_path):
+    d = tmp_path / "edges_dir"
+    d.mkdir()
+    (d / "part-0.csv").write_text("1,2\n2,3\n")
+    assert _edges(edges_from_csv(spark, str(d))) == _duck_edges(f"{d}/*.csv")
+    (d / "part-1.csv").write_text("3,1\n")
+    got = _edges(edges_from_csv(spark, str(d)))
+    assert got == _duck_edges(f"{d}/*.csv") == [(1, 2), (2, 3), (3, 1)]
+
+
+def test_staged_edges_repeat_call_reuses_frame_and_writes_nothing(spark, tmp_path):
+    path = _write_sample(tmp_path)
+    first = edges_from_csv(spark, path)
+    assert _edges(first) == _duck_edges(path)
+    before = _staged_files()
+    again = edges_from_csv(spark, path)
+    assert again is first
+    assert _staged_files() == before
+    assert one(G.two_hop_count_exact(again)) == 16
+
+
+def test_staged_edges_non_local_master_reads_csv(spark, tmp_path, monkeypatch):
+    # a non-local master's executors cannot see the driver's SparkFiles
+    # root: the reader must keep the plain CSV scan and stage nothing
+    path = _write_sample(tmp_path)
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://cluster:7077")
+    before = _staged_files()
+    edges = edges_from_csv(spark, path)
+    assert [f.endswith("/edges.csv") for f in edges.inputFiles()] == [True]
+    assert edges_from_csv(spark, path) is not edges
+    assert _staged_files() == before
+    assert _edges(edges) == _duck_edges(path)
+
+
+def test_fan_out_repartitions_post_aggregate_frame(spark, tmp_path):
+    # an aggregate's output is partitioned by its shuffle, not by the leaf
+    # files: even when those files alone estimate to enough splits, the
+    # RoundRobin exchange must stay
+    from twitter_followers_patterns_mapreduce_spark.sources.readers import (
+        _estimated_scan_partitions,
+        fan_out,
+    )
+
+    p = str(tmp_path / "leaves")
+    # 40 files charge 40 x openCostInBytes (4 MiB) > one 128 MiB split
+    spark.range(0, 1000).repartition(40).write.parquet(p)
+    agg = spark.read.parquet(p).groupBy((F.col("id") % 7).alias("k")).count()
+    assert _estimated_scan_partitions(agg) >= 2
+    out = fan_out(agg, 2)
+    assert out is not agg
+    assert "RoundRobinPartitioning" in out._jdf.queryExecution().executedPlan().toString()

@@ -167,12 +167,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.job == "count-edges":
         result = G.count_edges(edges, args.max if args.max is not None else REFERENCE_MAX_CE)
     elif args.job == "exact-2hop":
-        e = edges
-        if args.max is not None:
-            from pyspark.sql import functions as F
-
-            e = edges.where((F.col("src") < args.max) & (F.col("dst") < args.max))
-        result = G.two_hop_count_exact(e)
+        result = G.two_hop_count_exact(edges, args.max)
     elif args.job == "approx-2hop":
         # AP writes the path tuples AND prints the count
         # (approx/Approx2HopCount.java:114,119)

@@ -403,6 +403,13 @@ def _logreg_weights(
     decimal plan at sf0.1), no per-row BigDecimal accumulation; exact
     through ~10²⁴ scaled units (≅ 10¹² rows per dim).
 
+    Bound: one term must satisfy |x·r| < 2⁶³/10¹² ≈ 9.22e6, or its
+    ``q12`` cast overflows BIGINT.  The engine session runs ANSI
+    (``spark.sql.ansi.enabled``), so such a term raises
+    ``CAST_OVERFLOW`` and the fit returns no weights; it never becomes a
+    NULL that drops the term while ``_n`` still counts it.  Since
+    |r| < 1, any feature with |x| < 9.22e6 is always within the bound.
+
     Exactness contract: the left fold ((0+x₁w₁)+x₂w₂)+… runs in fixed
     index order — bit-identical on any engine — and the oracle unrolls
     the same fold (``list_reduce``), the same DECIMAL gradient sums, and
