@@ -596,3 +596,47 @@ def test_delta_closures_empty_delta(spark):
     d = u.where("in_d").select("src", "dst")
     assert G.delta_closures(d, u).count() == 0
     assert G.delta_closure_sum(d, u).collect() == [(0,)]
+
+
+# --- Plan-build floor: the engine session builds plans without call-site capture
+
+
+def _py4j_commands(spark, build) -> int:
+    """Py4J commands sent while ``build()`` runs (plan building only)."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        build()
+    finally:
+        del client.send_command
+    return len(sent)
+
+
+def test_triangle_plan_build_py4j_commands_bounded(spark, sample_edges):
+    """Building (not running) the auto min-rotation triangle plan stays
+    well under the 428 Py4J commands it sends with PySpark's DataFrame
+    debugging hook on (118 with it off, as ``get_spark`` sets it)."""
+
+    def build():
+        G.triangle_count(sample_edges, strategy="auto", min_rotation=True)
+
+    build()  # warm: one-off JVM class and function lookups
+    n = _py4j_commands(spark, build)
+    assert 0 < n <= 200, n
+
+
+def test_unresolved_column_still_raises_analysis_exception(sample_edges):
+    """Without call-site capture errors stay loud: same exception class
+    and error class, only the PySpark file:line context is gone."""
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException) as exc:
+        sample_edges.select(F.col("no_such_column")).collect()
+    assert exc.value.getCondition().startswith("UNRESOLVED_COLUMN.")

@@ -241,6 +241,23 @@ def test_fan_out_noop_when_scan_already_parallel_enough(spark, tmp_path):
     assert out is df  # unchanged frame, no Exchange added
 
 
+def test_bytes_conf_parses_spark_size_strings(spark):
+    # Spark 4 reports size confs with a unit suffix ('134217728b'), and a
+    # user may set one as '128m': both parse to bytes in Python
+    from twitter_followers_patterns_mapreduce_spark.sources.readers import _bytes_conf
+
+    key = "spark.sql.files.maxPartitionBytes"
+    assert spark.conf.get(key) == "134217728b"
+    assert _bytes_conf(spark, key, -1) == 128 * 1024 * 1024
+    assert _bytes_conf(spark, "spark.sql.files.openCostInBytes", -1) == 4 * 1024 * 1024
+    spark.conf.set(key, "128m")
+    try:
+        assert _bytes_conf(spark, key, -1) == 128 * 1024 * 1024
+    finally:
+        spark.conf.unset(key)
+    assert _bytes_conf(spark, "spark.graft.no.such.size", 7) == 7
+
+
 def test_fan_out_falls_back_for_fileless_frames(spark):
     # in-memory frames have no file lineage: keep the old unconditional
     # repartition (the estimate abstains rather than guessing)

@@ -127,3 +127,44 @@ def test_streamed_triangles_rearrival_only_batch(spark, tmp_path):
         EXPECT_N_EDGES,
         True,
     )
+
+
+# Two batches: the triangle {0,1,2} in both rotations (t_raw 6, 6 edges),
+# then the rest of K4 plus EXTRA (t_raw 24, 13 edges).
+TRI012 = [(a, b) for a in range(3) for b in range(3) if a != b]
+
+
+@pytest.fixture(scope="module")
+def two_batch_state(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("torn")
+    rest = [e for e in K4 + EXTRA if e not in TRI012]
+    feed = _stage_chunks(spark, str(root / "feed"), [TRI012, rest])
+    state = str(root / "state")
+    ids: list[int] = []
+    triangles_apply_stream(
+        spark, edges_tri_stream(spark, feed), state, str(root / "ckpt"), batch_ids=ids
+    )
+    assert ids == [0, 1]
+    return state
+
+
+@pytest.mark.parametrize("table,lost", [("count", "dir"), ("edges", "_SUCCESS")])
+def test_triangle_view_never_torn(spark, tmp_path, two_batch_state, table, lost):
+    """A crash between batch 1's two parallel writes leaves v=1 committed
+    in one table only: the view reads the newest version committed in
+    BOTH (v=0), so it returns batch 0's exact answer, not a stale pair."""
+    state = str(tmp_path / "state")
+    shutil.copytree(two_batch_state, state)
+    (row,) = triangle_view_from_state(spark, state).collect()
+    assert (row["t_raw"], row["n_edges"], row["consistent"]) == (
+        EXPECT_T_RAW,
+        EXPECT_N_EDGES,
+        True,
+    )
+    v1 = os.path.join(state, table, "v=1")
+    if lost == "dir":
+        shutil.rmtree(v1)
+    else:
+        os.remove(os.path.join(v1, "_SUCCESS"))
+    (row,) = triangle_view_from_state(spark, state).collect()
+    assert (row["t_raw"], row["n_edges"], row["consistent"]) == (6, 6, True)

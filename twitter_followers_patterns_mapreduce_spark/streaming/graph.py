@@ -58,6 +58,19 @@ def _latest_version(view_path: str, below: int | None = None) -> int | None:
     return max(versions) if versions else None
 
 
+def _latest_common_version(view_paths: list[str], below: int | None = None) -> int | None:
+    """Newest version committed in EVERY one of ``view_paths`` — the read
+    point of multi-table state whose tables are written side by side.  A
+    crash between the tables' writes leaves the newest version in only
+    some of them; it is skipped, and keep-2 retention (which runs only
+    after all of a batch's writes commit) guarantees the previous
+    version is still there in all of them."""
+    common = set.intersection(*(set(_committed_versions(p)) for p in view_paths))
+    if below is not None:
+        common = {v for v in common if v < below}
+    return max(common) if common else None
+
+
 def _prune_versions(view_path: str, keep: int = 2) -> None:
     """Retention: drop committed version dirs older than the newest
     ``keep`` (default 2 — the just-written version and its predecessor,

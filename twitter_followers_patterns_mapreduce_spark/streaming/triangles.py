@@ -34,9 +34,11 @@ full-recompute SQL oracle directly, with the exact recount emitted as
 the ``consistent`` companion boolean (the sketch-op discipline).
 
 State follows the keep-2 replay-idempotent version discipline of
-``streaming/graph.py``: each batch merges against the version strictly
-below its own id and overwrites its own ``v=<batch_id>``, so a
-crash-replayed batch re-derives (never double-counts) its delta.
+``streaming/graph.py``: each batch merges against the newest version
+strictly below its own id that is committed in BOTH tables and
+overwrites its own ``v=<batch_id>``, so a crash-replayed batch
+re-derives (never double-counts) its delta, and a crash between the two
+writes never pairs one batch's edges with another's count.
 
 Reference parity note: the reference (Twitter-Followers-Patterns
 MapReduce) is batch-only; this is extension surface (SURVEY.md §2.7).
@@ -55,7 +57,7 @@ from twitter_followers_patterns_mapreduce_spark.operators.graph import (
     delta_closures,
 )
 from twitter_followers_patterns_mapreduce_spark.streaming.graph import (
-    _latest_version,
+    _latest_common_version,
     _prune_versions,
 )
 
@@ -103,15 +105,13 @@ def triangles_apply_stream(
             .select("src", "dst")
             .distinct()
         )
-        prev = _latest_version(edges_dir, below=batch_id)
+        prev = _latest_common_version([edges_dir, count_dir], below=batch_id)
         if prev is None:
             old_edges = _empty_edges(spark)
             old_count = spark.range(1).selectExpr("CAST(0 AS BIGINT) AS t_raw")
         else:
             old_edges = spark.read.schema(EDGE_TRI_SCHEMA).parquet(f"{edges_dir}/v={prev}")
-            old_count = spark.read.schema(COUNT_TRI_SCHEMA).parquet(
-                f"{count_dir}/v={_latest_version(count_dir, below=batch_id)}"
-            )
+            old_count = spark.read.schema(COUNT_TRI_SCHEMA).parquet(f"{count_dir}/v={prev}")
         # only genuinely-new edges count (and re-arrivals are no-ops);
         # lazy checkpoint: D feeds the closure pass, U's tag and the
         # union write
@@ -159,15 +159,16 @@ def triangle_view_from_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """1 row from the standing state: the maintained closure count, the
     edge-set size, and the exact-recount gate companion ``consistent``
     (maintained == recount over the final edge set) — production would
-    skip the recount; the gate is the point here."""
+    skip the recount; the gate is the point here.  Both tables are read
+    at the newest version committed in both, so a crash between a
+    batch's two writes shows the previous batch, never a torn pair."""
     edges_dir = os.path.join(state_dir, "edges")
     count_dir = os.path.join(state_dir, "count")
-    ve = _latest_version(edges_dir)
-    vc = _latest_version(count_dir)
-    if ve is None or vc is None:
+    v = _latest_common_version([edges_dir, count_dir])
+    if v is None:
         raise FileNotFoundError(f"no triangle state at {state_dir}")
-    edges = spark.read.schema(EDGE_TRI_SCHEMA).parquet(f"{edges_dir}/v={ve}")
-    maintained = spark.read.schema(COUNT_TRI_SCHEMA).parquet(f"{count_dir}/v={vc}").selectExpr(
+    edges = spark.read.schema(EDGE_TRI_SCHEMA).parquet(f"{edges_dir}/v={v}")
+    maintained = spark.read.schema(COUNT_TRI_SCHEMA).parquet(f"{count_dir}/v={v}").selectExpr(
         "t_raw", "t_raw - t_raw AS _k"
     )
     recount = closure_count(edges, edges, edges).selectExpr(
