@@ -641,7 +641,7 @@ def test_effective_diameter_anf_null_case_ok(spark):
 
 def test_ckpt_severs_plan_history_flat_cost_over_deep_chain(spark):
     """Regression pin for the round-8 exponential-localCheckpoint fix:
-    25 chained self-join peeling passes through _ckpt must stay flat.
+    25 chained self-join peeling passes through lazy_ckpt must stay flat.
     Pre-fix, pass cost DOUBLED from ~pass 18 (0.5 -> 70 s by pass 22 on
     a 200-node graph); 25 passes would take >= 10 minutes.  The 120 s
     budget is ~20x the observed post-fix wall (~8 s) and far below the
@@ -650,12 +650,12 @@ def test_ckpt_severs_plan_history_flat_cost_over_deep_chain(spark):
 
     from pyspark.sql import functions as F
 
+    from twitter_followers_patterns_mapreduce_spark.functions.checkpoint import lazy_ckpt
     from twitter_followers_patterns_mapreduce_spark.operators.graph import neighbor_view
-    from twitter_followers_patterns_mapreduce_spark.operators.graph_iter import _ckpt
 
     k9 = [(a, b) for a in range(1, 10) for b in range(a + 1, 10)]
-    nbrs = _ckpt(neighbor_view(make_edges(spark, k9)))
-    alive = _ckpt(nbrs.select("v").distinct())
+    nbrs = lazy_ckpt(neighbor_view(make_edges(spark, k9)))
+    alive = lazy_ckpt(nbrs.select("v").distinct())
     t0 = time.time()
     for _ in range(25):
         surv = (
@@ -664,58 +664,11 @@ def test_ckpt_severs_plan_history_flat_cost_over_deep_chain(spark):
             .groupBy("v")
             .agg(F.count("*").cast("long").alias("core_deg"))
             .where(F.col("core_deg") >= 2)
-            .transform(_ckpt)
+            .transform(lazy_ckpt)
         )
         alive = surv.select("v")
         assert alive.count() == 9  # K9: nothing ever peels at k=2
     assert time.time() - t0 < 120.0
-
-
-def test_ckpt_fast_path_engages_on_this_spark(spark):
-    """The bare-LogicalRDD rebuild must actually run on the pinned
-    Spark version — if the private internalCreateDataFrame API drifts,
-    this fails instead of every >=17-pass chain silently re-hitting the
-    exponential localCheckpoint wall."""
-    import warnings as _w
-
-    from twitter_followers_patterns_mapreduce_spark.operators import graph_iter as GI
-
-    df = spark.range(8).selectExpr("id AS a", "id * 2 AS b").where("a >= 0")
-    before = GI._CKPT_FAST_PATH_USES
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        out = GI._ckpt(df)
-    assert GI._CKPT_FAST_PATH_USES == before + 1
-    assert not [c for c in caught if issubclass(c.category, RuntimeWarning)]
-    # values survive the rebuild byte-identically
-    assert sorted((r["a"], r["b"]) for r in out.collect()) == [
-        (i, 2 * i) for i in range(8)
-    ]
-
-
-def test_ckpt_fallback_warns_loudly_once(spark, monkeypatch):
-    """API drift must be LOUD: when the private method is gone, _ckpt
-    still returns correct rows but emits one RuntimeWarning per
-    process naming the exponential cost it can no longer remove."""
-    import warnings as _w
-
-    from twitter_followers_patterns_mapreduce_spark.operators import graph_iter as GI
-
-    class _NoPrivateApi:
-        def __getattr__(self, name):  # internalCreateDataFrame lookup fails
-            raise AttributeError(name)
-
-    df = spark.range(5).selectExpr("id AS a")
-    monkeypatch.setattr(spark, "_jsparkSession", _NoPrivateApi())
-    monkeypatch.setattr(GI, "_CKPT_FALLBACK_WARNED", False)
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        out = GI._ckpt(df)
-        GI._ckpt(df)  # second call: warned flag suppresses the repeat
-    warns = [c for c in caught if issubclass(c.category, RuntimeWarning)]
-    assert len(warns) == 1
-    assert "localCheckpoint" in str(warns[0].message)
-    assert sorted(r["a"] for r in out.collect()) == [0, 1, 2, 3, 4]
 
 
 def test_betweenness_landmark_diamond_chain_closed_form(spark):

@@ -124,3 +124,9 @@ def test_streamed_bloom_restart_resumes(spark, tmp_path):
         spark, state, _fact(spark), "l_partkey", M, K
     ).collect()
     assert row.asDict() == _batch_summary(spark)
+    # a crash between batch 3's two writes (words/v=3 uncommitted) must
+    # show batch 2's filter in both tables, never keys v=3 + words v=2
+    os.remove(os.path.join(state, "words", "v=3", "_SUCCESS"))
+    dkeys, _ = bloom_state(spark, state)
+    upto2 = [row for b in _chunks(4)[:3] for row in b]
+    assert {r["k"] for r in dkeys.collect()} == {k for k, sz in upto2 if sz < 3}

@@ -1,10 +1,31 @@
-"""Lazy localCheckpoint with plan-history severance — the shared form
-of ``operators/graph_iter._ckpt`` (see that docstring for the measured
-round-8 exponential the bare-LogicalRDD rebuild prevents, and the
-round-12 measurements extending it to non-iterative reuse barriers:
+"""Lazy localCheckpoint with plan-history severance — what every
+iterative loop in ``operators/graph_iter.py``, and the reuse barriers
+that opted in elsewhere, use instead of a bare
+``localCheckpoint(eager=False)``.
+
+Root cause (measured, round 8): ``Dataset.localCheckpoint`` builds its
+result via ``LogicalRDD.fromDataset``, which CAPTURES the origin
+dataset's optimizer state (stats + constraint set) into the new leaf.
+In a loop whose next pass references the checkpointed frame TWICE
+(every peeling/self-join shape), that captured state compounds ~2.5×
+per pass — by pass ~18 the ``localCheckpoint`` CALL ITSELF
+(driver-side, not the job: jobs stayed 6 jobs/10 stages/11 tasks flat)
+costs seconds and doubles every pass: 0.5 s → 0.8 → 1.6 → 4.2 → 10 →
+27 → 70 s on a 200-node toy graph, identically with eager=True, codegen
+off, broadcast off, and constraint propagation off.  Fix: rebuild a
+BARE ``LogicalRDD`` from the physical RDD (``internalCreateDataFrame``
+— no origin capture) and checkpoint THAT: per-pass cost is flat 0.3 s
+through 30+ passes.  Correctness is unchanged — the wrapped
+``localCheckpoint`` still does the row-copy + lazy materialization;
+values/schema are byte-identical (the full oracle suite re-passed).
+Without this, ANY ≳17-pass chain (SCC's O(#SCC) super-rounds, BFS/SSSP
+frontiers, deep coreness tiers) hits a driver-side exponential wall
+that no cluster size can buy back.
+
+The origin-capture cost is paid per ``localCheckpoint`` CALL, loops or
+not; round 12 measured it at non-iterative reuse barriers too:
 ann_mmr_topk 2.44→2.11 s, dedup_semantic 5.56→4.72 s,
-ann_topk_ivf_kmeans 2.83→2.26 s warm — the origin-capture cost is paid
-per ``localCheckpoint`` CALL, loops or not).
+ann_topk_ivf_kmeans 2.83→2.26 s warm.
 
 Trade-off to know before swapping a site: the bare rebuild drops the
 origin dataset's CAPTURED STATS, so the static planner can no longer
@@ -14,6 +35,11 @@ converts at runtime from actual shuffle sizes, and explicit
 rely on static auto-broadcast of the checkpointed side should keep the
 plain form — which is why call sites opt in one by one, with an A/B,
 rather than via a global swap.
+
+The bare-rebuild path touches one ``private[sql]`` JVM method, so it
+degrades to the plain form if the API drifts — but LOUDLY (one
+RuntimeWarning per process): silent degradation would re-hit the
+exponential wall with no signal.
 """
 
 from __future__ import annotations
@@ -48,8 +74,10 @@ def lazy_ckpt(df: DataFrame) -> DataFrame:
             warnings.warn(
                 "lazy_ckpt bare-LogicalRDD rebuild unavailable"
                 f" ({type(exc).__name__}: {exc}); falling back to plain"
-                " localCheckpoint — reuse barriers regain the captured"
-                " optimizer-state cost this fast path removes",
+                " localCheckpoint — iterative chains of ~17+ passes will"
+                " hit the exponential driver-side localCheckpoint cost"
+                " this fast path removes, and reuse barriers regain the"
+                " captured optimizer-state cost",
                 RuntimeWarning,
                 stacklevel=2,
             )

@@ -5,8 +5,9 @@ chains exactly two MapReduce jobs by hand via an HDFS ``Temp`` dir).
 
 Spark-first iteration model: each pass is a declarative join + aggregate
 DAG; the driver loop only decides WHEN to stop, never touches row data.
-``_ckpt`` (a lazy localCheckpoint behind a bare-LogicalRDD rebuild, see
-its docstring for the measured exponential it prevents) truncates
+``lazy_ckpt`` (a lazy localCheckpoint behind a bare-LogicalRDD rebuild,
+``functions/checkpoint.py``, whose docstring gives the measured
+exponential it prevents) truncates
 lineage AND captured optimizer state per pass so the plan stays O(1)
 deep instead of O(iterations) (the Spark analogue of the reference's
 job-chaining materialization, minus HDFS round-trips).
@@ -34,72 +35,14 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import re
-import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from twitter_followers_patterns_mapreduce_spark.functions.checkpoint import lazy_ckpt
+
 #: decimal type used for the order-independent rank reduction
 _DEC = "decimal(28,12)"
-
-#: fast-path instrumentation: count of successful bare-LogicalRDD
-#: rebuilds (pinned by test — a Spark upgrade that drops the private
-#: API must fail loudly, not silently re-hit the exponential wall)
-_CKPT_FAST_PATH_USES = 0
-_CKPT_FALLBACK_WARNED = False
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Lazy localCheckpoint with PLAN-HISTORY SEVERANCE — what every
-    iterative loop in this module uses instead of a bare
-    ``localCheckpoint(eager=False)``.
-
-    Root cause (measured, round 8): ``Dataset.localCheckpoint`` builds
-    its result via ``LogicalRDD.fromDataset``, which CAPTURES the origin
-    dataset's optimizer state (stats + constraint set) into the new
-    leaf.  In a loop whose next pass references the checkpointed frame
-    TWICE (every peeling/self-join shape), that captured state compounds
-    ~2.5× per pass — by pass ~18 the ``localCheckpoint`` CALL ITSELF
-    (driver-side, not the job: jobs stayed 6 jobs/10 stages/11 tasks
-    flat) costs seconds and doubles every pass: 0.5 s → 0.8 → 1.6 → 4.2
-    → 10 → 27 → 70 s on a 200-node toy graph, identically with
-    eager=True, codegen off, broadcast off, and constraint propagation
-    off.  Fix: rebuild a BARE ``LogicalRDD`` from the physical RDD
-    (``internalCreateDataFrame`` — no origin capture) and checkpoint
-    THAT: per-pass cost is flat 0.3 s through 30+ passes.  Correctness
-    is unchanged — the wrapped ``localCheckpoint`` still does the
-    row-copy + lazy materialization; values/schema are byte-identical
-    (the full oracle suite re-passed).  Without this, ANY ≳17-pass chain
-    (SCC's O(#SCC) super-rounds, BFS/SSSP frontiers, deep coreness
-    tiers) hits a driver-side exponential wall that no cluster size can
-    buy back.
-
-    The bare-rebuild path touches one ``private[sql]`` JVM method, so it
-    degrades gracefully to the plain form if the API drifts — but LOUDLY
-    (one RuntimeWarning per process): silent degradation would re-hit
-    the exponential wall with no signal.  ``_CKPT_FAST_PATH_USES`` pins
-    the fast path in tests against exactly that drift."""
-    global _CKPT_FAST_PATH_USES, _CKPT_FALLBACK_WARNED
-    spark = df.sparkSession
-    try:
-        jdf = df._jdf
-        jrdd = jdf.queryExecution().toRdd()
-        j2 = spark._jsparkSession.internalCreateDataFrame(jrdd, jdf.schema(), False)
-        df = DataFrame(j2, spark)
-        _CKPT_FAST_PATH_USES += 1
-    except Exception as exc:  # private-API drift fallback
-        if not _CKPT_FALLBACK_WARNED:
-            _CKPT_FALLBACK_WARNED = True
-            warnings.warn(
-                "_ckpt bare-LogicalRDD rebuild unavailable"
-                f" ({type(exc).__name__}: {exc}); falling back to plain"
-                " localCheckpoint — iterative chains of ~17+ passes will"
-                " hit the exponential driver-side localCheckpoint cost"
-                " this fast path exists to remove",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-    return df.localCheckpoint(eager=False)
 
 
 def _integral(dtype: str) -> bool:
@@ -161,17 +104,17 @@ def connected_components(edges: DataFrame, max_iter: int = 50, fold: int = 4) ->
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .distinct()
-        .transform(_ckpt)
+        .transform(lazy_ckpt)
     )
     # neighbor view + self-loops: one reference to comp per pass, and
     # the seed pass (min over N(v) ∪ {v}) is the same single hash agg
     prop = und.unionAll(
         und.select(F.col("a"), F.col("a").alias("b")).distinct()
-    ).transform(_ckpt)
+    ).transform(lazy_ckpt)
     comp = (
         prop.groupBy(F.col("a").alias("id"))
         .agg(F.min("b").alias("comp"))
-        .transform(_ckpt)
+        .transform(lazy_ckpt)
     )
 
     if _integral(dict(comp.dtypes)["comp"]):
@@ -194,7 +137,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50, fold: int = 4) ->
             passes += 1
         # one lazy checkpoint + one convergence action per fold: the
         # fingerprint agg below is what materializes the k passes
-        comp = _ckpt(comp)
+        comp = lazy_ckpt(comp)
         cur_fp = tuple(comp.agg(*fp_aggs).collect()[0])
         if cur_fp == prev_fp:
             break
@@ -246,20 +189,20 @@ def _pagerank_fixpoint(
     ONCE per pass (the contribs join), so consecutive passes chain
     LINEARLY and only every ``fold``-th pass needs the lineage-cutting
     checkpoint — checkpoints never change values, so the composed plan
-    computes identical ranks.  Measured at sf0.1 the per-pass ``_ckpt``
+    computes identical ranks.  Measured at sf0.1 the per-pass ``lazy_ckpt``
     planning was 3.67 s of the 4.06 s warm runtime while executing the
     whole 5-pass DAG took 0.04 s; with ``fold=4`` the loop plans twice
     instead of five times."""
     if fold < 1:
         raise ValueError(f"fold must be >= 1, got {fold}")
-    e = edges.select("src", "dst").transform(_ckpt)
+    e = edges.select("src", "dst").transform(lazy_ckpt)
     deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-    e_deg = e.join(deg, "src").transform(_ckpt)
+    e_deg = e.join(deg, "src").transform(lazy_ckpt)
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
-        .transform(_ckpt)
+        .transform(lazy_ckpt)
     )
     ranks = nodes.select("id", seed_expr(F.col("id")).cast(_DEC).alias("rank"))
     for i in range(iters):
@@ -280,7 +223,7 @@ def _pagerank_fixpoint(
         # checkpoint every fold-th pass; the last pass flows straight
         # into the terminal emit below (a trailing barrier bought nothing)
         if (i + 1) % fold == 0 and (i + 1) < iters:
-            ranks = _ckpt(ranks)
+            ranks = lazy_ckpt(ranks)
     # 6dp emission via exact integer floor on the decimal — DuckDB's
     # decimal downscale cast TRUNCATES while Spark's ROUNDS, so neither
     # is used: floor(rank*1e6) is exact in both.
@@ -430,16 +373,16 @@ def connected_components_twostar(edges: DataFrame, max_iter: int = 30) -> DataFr
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
         .distinct()
-        .transform(_ckpt)
+        .transform(lazy_ckpt)
     )
     e = _canon_pairs(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    ).transform(_ckpt)
+    ).transform(lazy_ckpt)
     fp = None
     for _ in range(max_iter):
         # lazy checkpoint: the fingerprint agg below is the action that
         # materializes the round — one job per round, not two
-        e = _small_star(_large_star(e)).transform(_ckpt)
+        e = _small_star(_large_star(e)).transform(lazy_ckpt)
         new_fp = e.agg(
             F.count("*").alias("n"),
             F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
@@ -480,8 +423,8 @@ def k_core(edges: DataFrame, k: int = 2, rounds: int = 8) -> DataFrame:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     from twitter_followers_patterns_mapreduce_spark.operators.graph import neighbor_view
 
-    nbrs = neighbor_view(edges).transform(_ckpt)
-    alive = nbrs.select("v").distinct().transform(_ckpt)
+    nbrs = neighbor_view(edges).transform(lazy_ckpt)
+    alive = nbrs.select("v").distinct().transform(lazy_ckpt)
     prev = alive.count()
     deg = None
     for _ in range(rounds):
@@ -493,7 +436,7 @@ def k_core(edges: DataFrame, k: int = 2, rounds: int = 8) -> DataFrame:
             .groupBy("v")
             .agg(F.count("*").cast("long").alias("core_deg"))
             .where(F.col("core_deg") >= k)
-            .transform(_ckpt)
+            .transform(lazy_ckpt)
         )
         alive = deg.select("v")
         cur = deg.count()
@@ -552,8 +495,8 @@ def coreness(edges: DataFrame, kmax: int = 4, rounds: int = 8) -> DataFrame:
     """
     from twitter_followers_patterns_mapreduce_spark.operators.graph import neighbor_view
 
-    nbrs = neighbor_view(edges).transform(_ckpt)
-    alive = nbrs.select("v").distinct().transform(_ckpt)
+    nbrs = neighbor_view(edges).transform(lazy_ckpt)
+    alive = nbrs.select("v").distinct().transform(lazy_ckpt)
     parts = [alive.select("v", F.lit(1).alias("k"))]
 
     # Round-12 (guide §1.2 "don't compute things you throw away"): the
@@ -569,7 +512,7 @@ def coreness(edges: DataFrame, kmax: int = 4, rounds: int = 8) -> DataFrame:
     # degree table over the current alive set, exactly what the old
     # per-round recompute produced.
     def _deg(alive_set: DataFrame) -> DataFrame:
-        return _ckpt(
+        return lazy_ckpt(
             nbrs.join(alive_set, "v")
             .join(alive_set.select(F.col("v").alias("n")), "n")
             .groupBy("v")
@@ -664,9 +607,9 @@ def bfs_distances(edges: DataFrame, source: int, max_iter: int = 30) -> DataFram
     spark = edges.sparkSession
     dist = spark.range(1).select(
         src_lit.alias("id"), F.lit(0).cast("long").alias("dist")
-    ).transform(_ckpt)
+    ).transform(lazy_ckpt)
     frontier = dist.select("id")
-    e = edges.select("src", "dst").transform(_ckpt)
+    e = edges.select("src", "dst").transform(lazy_ckpt)
     for i in range(1, max_iter + 1):
         nxt = (
             frontier.join(e, frontier["id"] == e["src"])
@@ -674,11 +617,11 @@ def bfs_distances(edges: DataFrame, source: int, max_iter: int = 30) -> DataFram
             .distinct()
             .join(dist, "id", "left_anti")
             .select("id", F.lit(i).cast("long").alias("dist"))
-            .transform(_ckpt)
+            .transform(lazy_ckpt)
         )
         if nxt.count() == 0:
             break
-        dist = dist.unionAll(nxt).transform(_ckpt)
+        dist = dist.unionAll(nxt).transform(lazy_ckpt)
         frontier = nxt.select("id")
     return dist
 
@@ -742,14 +685,14 @@ def k_truss(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
         edges.where(F.col("src") != F.col("dst"))
         .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .distinct()
-        .transform(_ckpt)
+        .transform(lazy_ckpt)
     )
     for _ in range(rounds):
         sup = _edge_support(e)
         e = (
             sup.where(F.col("support") >= k - 2)
             .select("a", "b")
-            .transform(_ckpt)
+            .transform(lazy_ckpt)
         )
     # _edge_support's wedges are already semi-joined against e, so its
     # output is a subset of e — no extra membership join needed
@@ -809,7 +752,7 @@ def landmark_closeness(edges: DataFrame, mod: int = 20, max_depth: int = 4) -> D
     import math
 
     lcm = math.lcm(*range(1, max_depth + 1))
-    e = edges.select("src", "dst").transform(_ckpt)
+    e = edges.select("src", "dst").transform(lazy_ckpt)
     nodes = e.select(F.col("src").alias("id")).union(
         e.select(F.col("dst").alias("id"))
     ).distinct()
@@ -817,7 +760,7 @@ def landmark_closeness(edges: DataFrame, mod: int = 20, max_depth: int = 4) -> D
     # settled state: (landmark, id, dist); seed = each landmark at itself
     dist = lm.select(
         F.col("id").alias("landmark"), F.col("id"), F.lit(0).cast("long").alias("dist")
-    ).transform(_ckpt)
+    ).transform(lazy_ckpt)
     frontier = dist.select("landmark", "id")
     for d in range(1, max_depth + 1):
         nxt = (
@@ -826,9 +769,9 @@ def landmark_closeness(edges: DataFrame, mod: int = 20, max_depth: int = 4) -> D
             .distinct()
             .join(dist, ["landmark", "id"], "left_anti")
             .select("landmark", "id", F.lit(d).cast("long").alias("dist"))
-            .transform(_ckpt)
+            .transform(lazy_ckpt)
         )
-        dist = dist.unionAll(nxt).transform(_ckpt)
+        dist = dist.unionAll(nxt).transform(lazy_ckpt)
         frontier = nxt.select("landmark", "id")
     hist = (
         dist.where(F.col("dist") > 0)
@@ -957,10 +900,10 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     from twitter_followers_patterns_mapreduce_spark.operators.graph import neighbor_view
 
-    nbrs = neighbor_view(edges).transform(_ckpt)
+    nbrs = neighbor_view(edges).transform(lazy_ckpt)
     labels = nbrs.select("v").distinct().select(
         "v", F.col("v").cast("long").alias("label")
-    ).transform(_ckpt)
+    ).transform(lazy_ckpt)
     for _ in range(rounds):
         counted = (
             nbrs.join(
@@ -978,7 +921,7 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
                     "label", F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))
                 ).alias("label")
             )
-            .transform(_ckpt)
+            .transform(lazy_ckpt)
         )
     return labels.select("v", "label")
 
@@ -1041,13 +984,13 @@ def hits(edges: DataFrame, iters: int = 3) -> DataFrame:
         edges.where(F.col("src") != F.col("dst"))
         .select("src", "dst")
         .distinct()
-        .transform(_ckpt)
+        .transform(lazy_ckpt)
     )
     nodes = (
         e.select(F.col("src").alias("v"))
         .union(e.select(F.col("dst").alias("v")))
         .distinct()
-        .transform(_ckpt)
+        .transform(lazy_ckpt)
     )
     hub = nodes.select("v", F.lit(1).cast("long").alias("hub"))
     auth = None
@@ -1061,13 +1004,13 @@ def hits(edges: DataFrame, iters: int = 3) -> DataFrame:
             e.join(hub.select(F.col("v").alias("src"), "hub"), "src")
             .groupBy(F.col("dst").alias("v"))
             .agg(F.sum("hub").cast("long").alias("auth"))
-            .transform(_ckpt)
+            .transform(lazy_ckpt)
         )
         hub = (
             e.join(auth.select(F.col("v").alias("dst"), "auth"), "dst")
             .groupBy(F.col("src").alias("v"))
             .agg(F.sum("auth").cast("long").alias("hub"))
-            .transform(_ckpt)
+            .transform(lazy_ckpt)
         )
     return (
         nodes.join(hub, "v", "left")
@@ -1138,7 +1081,7 @@ def random_walks(edges: DataFrame, walks_per_node: int = 2, length: int = 3) -> 
         e.groupBy("src")
         .agg(F.sort_array(F.collect_list("dst")).alias("arr"))
         .select("src", "arr", F.size("arr").cast("long").alias("deg"))
-        .transform(_ckpt)
+        .transform(lazy_ckpt)
     )
     frontier = nbr.select(F.col("src").alias("start")).select(
         "start", F.explode(F.expr(f"sequence(1, {walks_per_node})")).alias("walk")
@@ -1227,7 +1170,7 @@ def mutual_reach_pairs(edges: DataFrame, k: int = 3) -> DataFrame:
         edges.where(F.col("src") != F.col("dst"))
         .select("src", "dst")
         .distinct()
-        .transform(_ckpt)
+        .transform(lazy_ckpt)
     )
     reach = e
     for _ in range(k - 1):
@@ -1238,7 +1181,7 @@ def mutual_reach_pairs(edges: DataFrame, k: int = 3) -> DataFrame:
             .where(F.col("src") != F.col("dst"))
         )
         reach = (
-            reach.unionByName(step).distinct().transform(_ckpt)
+            reach.unionByName(step).distinct().transform(lazy_ckpt)
         )
     swap = reach.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     return (
@@ -1333,7 +1276,7 @@ def strongly_connected_components(
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .transform(_ckpt)
+        .transform(lazy_ckpt)
     )
     # node set from the UNFILTERED edges: a node whose only edges are
     # self-loops has no row in ``e`` but is still a (singleton) SCC —
@@ -1343,7 +1286,7 @@ def strongly_connected_components(
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
         .distinct()
-        .transform(_ckpt)
+        .transform(lazy_ckpt)
     )
     spark = edges.sparkSession
     assigned = spark.createDataFrame([], schema="id LONG, scc_id LONG")
@@ -1356,7 +1299,7 @@ def strongly_connected_components(
                 .distinct()
                 .join(e.select(F.col("dst").alias("id")).distinct(), "id")
             )
-            dead = nodes.join(live, "id", "left_anti").transform(_ckpt)
+            dead = nodes.join(live, "id", "left_anti").transform(lazy_ckpt)
             if dead.count() == 0:
                 break
             # assigned is a union chain over checkpointed leaves (one
@@ -1365,11 +1308,11 @@ def strongly_connected_components(
             assigned = assigned.unionByName(
                 dead.select("id", F.col("id").alias("scc_id"))
             )
-            nodes = nodes.join(dead, "id", "left_anti").transform(_ckpt)
+            nodes = nodes.join(dead, "id", "left_anti").transform(lazy_ckpt)
             e = (
                 e.join(dead.select(F.col("id").alias("src")), "src", "left_anti")
                 .join(dead.select(F.col("id").alias("dst")), "dst", "left_anti")
-                .transform(_ckpt)
+                .transform(lazy_ckpt)
             )
         if nodes.count() == 0:
             break
@@ -1381,10 +1324,10 @@ def strongly_connected_components(
         # term into the joins: fmin' = min over in-nbrs ∪ {v}.
         eprop = e.unionByName(
             nodes.select(F.col("id").alias("src"), F.col("id").alias("dst"))
-        ).transform(_ckpt)
+        ).transform(lazy_ckpt)
         lab = nodes.select(
             "id", F.col("id").alias("fmin"), F.col("id").alias("bmin")
-        ).transform(_ckpt)
+        ).transform(lazy_ckpt)
         if _integral(dict(lab.dtypes)["fmin"]):
             fp_aggs = [
                 F.sum(F.col("fmin").cast("decimal(38,0)")).alias("sf"),
@@ -1413,7 +1356,7 @@ def strongly_connected_components(
                 )
                 lab = fprop.join(bprop, "id")
                 passes += 1
-            lab = _ckpt(lab)
+            lab = lazy_ckpt(lab)
             fp = tuple(lab.agg(*fp_aggs).collect()[0])
             if fp == prev_fp:
                 converged = True
@@ -1428,7 +1371,7 @@ def strongly_connected_components(
             "id", F.col("fmin").alias("scc_id")
         )
         assigned = assigned.unionByName(done)
-        nodes = nodes.join(done, "id", "left_anti").transform(_ckpt)
+        nodes = nodes.join(done, "id", "left_anti").transform(lazy_ckpt)
         if nodes.count() == 0:
             break
         # only a CONTINUING round re-reads the peeled edge set — cut its
@@ -1436,7 +1379,7 @@ def strongly_connected_components(
         e = (
             e.join(done.select(F.col("id").alias("src")), "src", "left_anti")
             .join(done.select(F.col("id").alias("dst")), "dst", "left_anti")
-            .transform(_ckpt)
+            .transform(lazy_ckpt)
         )
     else:
         raise RuntimeError(f"SCC peeling did not converge in {max_rounds} rounds")
@@ -1515,7 +1458,7 @@ def reach_profile(edges: DataFrame, kmax: int = 3) -> DataFrame:
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .transform(_ckpt)
+        .transform(lazy_ckpt)
     )
     nodes = (
         e.select(F.col("src").alias("id"))
@@ -1532,7 +1475,7 @@ def reach_profile(edges: DataFrame, kmax: int = 3) -> DataFrame:
                 .where(F.col("u") != F.col("dst"))
                 .select("u", F.col("dst").alias("v"))
             )
-            reach = reach.unionByName(step).distinct().transform(_ckpt)
+            reach = reach.unionByName(step).distinct().transform(lazy_ckpt)
         out.append(
             reach.agg(F.count("*").cast("long").alias("n_pairs"))
             .crossJoin(F.broadcast(nodes))
@@ -1600,14 +1543,14 @@ def reach_anf(edges: DataFrame, kmax: int = 6) -> DataFrame:
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .transform(_ckpt)
+        .transform(lazy_ckpt)
     )
     state = (
         e.select(F.col("src").alias("id"))
         .union(e.select("dst"))
         .groupBy("id")
         .agg(F.expr("hll_sketch_agg(id)").alias("sk"))
-        .transform(_ckpt)
+        .transform(lazy_ckpt)
     )
     out = []
     for k in range(1, kmax + 1):
@@ -1618,7 +1561,7 @@ def reach_anf(edges: DataFrame, kmax: int = 6) -> DataFrame:
             state.unionByName(nbr)
             .groupBy("id")
             .agg(F.expr("hll_union_agg(sk)").alias("sk"))
-            .transform(_ckpt)
+            .transform(lazy_ckpt)
         )
         out.append(
             state.select(F.expr("hll_sketch_estimate(sk)").alias("est"))
@@ -1682,7 +1625,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     community-sized.  Output: (n_communities, m_edges, modularity)."""
     from twitter_followers_patterns_mapreduce_spark.operators.graph import undirected_pairs
 
-    und = undirected_pairs(edges).transform(_ckpt)
+    und = undirected_pairs(edges).transform(lazy_ckpt)
     m_row = und.agg(F.count("*").cast("long").alias("m"))
     la = labels.select(F.col("v").alias("a"), F.col("label").alias("la"))
     lb = labels.select(F.col("v").alias("b"), F.col("label").alias("lb"))
@@ -1768,7 +1711,7 @@ def effective_diameter(edges: DataFrame, kmax: int = 3, q: float = 0.9) -> DataF
     the quantile and interpolation has no left neighbor (k_star = 1:
     the graph is within one hop of the target mass).
     """
-    prof = reach_profile(edges, kmax=kmax).transform(_ckpt)
+    prof = reach_profile(edges, kmax=kmax).transform(lazy_ckpt)
     return _diameter_readout(prof, kmax=kmax, q=q)
 
 
@@ -1824,13 +1767,13 @@ def effective_diameter_anf(
     the 5% band.  Output: (k_star, n_pairs_kmax, eff_diameter, anf_ok).
     """
     exact = _diameter_readout(
-        reach_profile(edges, kmax=kmax).transform(_ckpt), kmax=kmax, q=q
+        reach_profile(edges, kmax=kmax).transform(lazy_ckpt), kmax=kmax, q=q
     )
     anf_prof = reach_anf(edges, kmax=kmax).selectExpr(
         "k", "approx_pairs AS n_pairs"
     )
     anf = _diameter_readout(
-        anf_prof.transform(_ckpt), kmax=kmax, q=q
+        anf_prof.transform(lazy_ckpt), kmax=kmax, q=q
     ).selectExpr("eff_diameter AS ed_anf")
     ok = (
         "(eff_diameter IS NULL AND ed_anf IS NULL) OR "
@@ -1900,19 +1843,19 @@ def sssp_weighted(edges: DataFrame, source: int, max_hops: int = 6) -> DataFrame
     Scale shape: per pass ONE frontier ⋈ edges equi-join (AQE splits
     hub keys) and one MIN hash-agg over O(|V reachable|) rows; state
     is (id, dist) — aggregate-sized, never edges; lazy-checkpoint
-    severance per pass (``_ckpt``).  O(max_hops) passes with NO
+    severance per pass (``lazy_ckpt``).  O(max_hops) passes with NO
     per-pass driver action: the loop is a fixed-depth plan chain, the
     one materializing action is the final readout.
     Output: (id, dist) for every node reachable within ``max_hops``.
     """
     e = edges.selectExpr(
         "src", "dst", "CAST(1 + (src + dst) % 5 AS BIGINT) AS w"
-    ).transform(_ckpt)
+    ).transform(lazy_ckpt)
     spark = edges.sparkSession
     dist = spark.range(1).select(
         F.lit(source).cast("long").alias("id"),
         F.lit(0).cast("long").alias("dist"),
-    ).transform(_ckpt)
+    ).transform(lazy_ckpt)
     for _ in range(max_hops):
         cand = (
             dist.join(e, dist["id"] == e["src"])
@@ -1922,7 +1865,7 @@ def sssp_weighted(edges: DataFrame, source: int, max_hops: int = 6) -> DataFrame
             dist.unionAll(cand)
             .groupBy("id")
             .agg(F.min("dist").cast("long").alias("dist"))
-            .transform(_ckpt)
+            .transform(lazy_ckpt)
         )
     return dist
 
@@ -1970,7 +1913,7 @@ def hub_attack_tolerance(edges: DataFrame, top_k: int = 5, max_iter: int = 30) -
     # materialize the (possibly expensive) edge derivation ONCE — five
     # downstream consumers (degrees, both CC runs, kept, survivors)
     # otherwise each re-run the scan + DISTINCT
-    edges = edges.select("src", "dst").transform(_ckpt)
+    edges = edges.select("src", "dst").transform(lazy_ckpt)
     und = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).union(
         edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
     ).distinct()
@@ -2118,7 +2061,7 @@ def betweenness_landmark(
     accumulated dependency — bw_micro/1e6 ≈ Σ_{s∈L} δ_s(v), the
     unnormalized sampled betweenness.
     """
-    e = edges.select("src", "dst").distinct().transform(_ckpt)
+    e = edges.select("src", "dst").distinct().transform(lazy_ckpt)
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
@@ -2131,7 +2074,7 @@ def betweenness_landmark(
         F.col("id"),
         F.lit(0).cast("long").alias("dist"),
         F.lit(1).cast("long").alias("sigma"),
-    ).transform(_ckpt)
+    ).transform(lazy_ckpt)
     frontier = sig
     for d in range(1, max_depth + 1):
         nxt = (
@@ -2143,9 +2086,9 @@ def betweenness_landmark(
             .select(
                 "landmark", "id", F.lit(d).cast("long").alias("dist"), "sigma"
             )
-            .transform(_ckpt)
+            .transform(lazy_ckpt)
         )
-        sig = sig.unionAll(nxt).transform(_ckpt)
+        sig = sig.unionAll(nxt).transform(lazy_ckpt)
         frontier = nxt
     # backward dependency accumulation, deepest level first (δ there 0);
     # every INTERMEDIATE level (dist 1..max_depth-1) contributes to the
@@ -2200,7 +2143,7 @@ def betweenness_landmark(
             j.selectExpr("landmark", "id", f"{term} AS t")
             .groupBy("landmark", "id")
             .agg(F.sum("t").cast("long").alias("delta_micro"))
-            .transform(_ckpt)
+            .transform(lazy_ckpt)
         )
         all_deltas.append(delta)
     acc = all_deltas[0]

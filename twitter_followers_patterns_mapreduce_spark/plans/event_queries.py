@@ -1215,15 +1215,13 @@ def events_holt_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from twitter_followers_patterns_mapreduce_spark.streaming.ewma import (
         ewma_apply_stream,
         ewma_event_stream,
+        state_tables,
     )
-    from twitter_followers_patterns_mapreduce_spark.streaming.graph import (
-        _latest_version,
-    )
+    from twitter_followers_patterns_mapreduce_spark.streaming.state import read_state
 
     feed_dir, state_dir, ckpt_dir = _stage_ewma_feed(spark, sf_dir)
     ewma_apply_stream(spark, ewma_event_stream(spark, feed_dir), state_dir, ckpt_dir)
-    v = _latest_version(state_dir)
-    buckets = spark.read.parquet(f"{state_dir}/v={v}")
+    buckets = read_state(spark, state_tables(state_dir))["buckets"]
     return E.holt_from_counts(
         buckets.select("event_type", "h", F.col("n_events").cast("long").alias("c")),
         horizon=3,

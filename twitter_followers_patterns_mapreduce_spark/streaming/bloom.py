@@ -15,9 +15,8 @@ rows + a ≤m/32-row merge; the word table is fixed-size regardless of
 stream length.  Deletions would need a counting filter — inserts-only
 here, like every Bloom filter in production join pruning.
 
-State follows the keep-2 replay-idempotent version discipline of
-``streaming/graph.py`` (two sub-tables, ``dkeys`` + ``words``, written
-in parallel threads like ``streaming/triangles.py``).
+State is two tables, ``dkeys`` + ``words``, under the versioned
+discipline of ``streaming/state.py``.
 
 Order-independence gate: set union and bit_or are both commutative, so
 the drained state equals the one-shot build under ANY chunking and the
@@ -32,9 +31,6 @@ MapReduce) is batch-only; this is extension surface (SURVEY.md §2.7).
 
 from __future__ import annotations
 
-import os
-from concurrent.futures import ThreadPoolExecutor
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,13 +38,19 @@ from twitter_followers_patterns_mapreduce_spark.operators.planner import (
     bloom_build_words,
     bloom_score,
 )
-from twitter_followers_patterns_mapreduce_spark.streaming.graph import (
-    _latest_version,
-    _prune_versions,
+from twitter_followers_patterns_mapreduce_spark.streaming.state import (
+    Tables,
+    drain,
+    read_state,
+    tables,
 )
 
 #: Schema of staged dim-feed files (part-key + the predicate column).
 DIM_FEED_SCHEMA = "p_partkey LONG, p_size LONG"
+
+
+def state_tables(state_dir: str) -> Tables:
+    return tables(state_dir, dkeys="k LONG", words="word_idx LONG, word LONG")
 
 
 def dim_file_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -74,75 +76,37 @@ def bloom_apply_stream(
     """Drain ``stream`` (availableNow) into the versioned key-set +
     word-table state: per batch one anti-join, a |Δ|-key probe build,
     and a ≤m/32-row bit_or merge.  Blocks until drained."""
-    dkeys_dir = os.path.join(state_dir, "dkeys")
-    words_dir = os.path.join(state_dir, "words")
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_ids is not None:
-            batch_ids.append(batch_id)
+    def _merge(batch_df: DataFrame, prev: dict[str, DataFrame] | None) -> dict[str, DataFrame]:
         bkeys = (
             batch_df.where(dim_pred)
             .selectExpr(f"CAST({dim_key} AS BIGINT) AS k")
             .distinct()
         )
-        prev = _latest_version(dkeys_dir, below=batch_id)
         if prev is None:
-            old_keys = None
             new_keys = bkeys.localCheckpoint(eager=False)
-        else:
-            old_keys = spark.read.parquet(f"{dkeys_dir}/v={prev}")
-            new_keys = bkeys.join(old_keys, "k", "left_anti").localCheckpoint(
-                eager=False
-            )
-        delta_words = bloom_build_words(new_keys, m_bits, k_hash)
-        if prev is None:
-            merged_keys, merged_words = new_keys, delta_words
-        else:
-            old_words = spark.read.parquet(
-                f"{words_dir}/v={_latest_version(words_dir, below=batch_id)}"
-            )
-            merged_keys = old_keys.unionByName(new_keys)
-            merged_words = (
-                old_words.unionByName(delta_words)
-                .groupBy("word_idx")
-                .agg(F.expr("bit_or(word)").alias("word"))
-            )
+            return {"dkeys": new_keys, "words": bloom_build_words(new_keys, m_bits, k_hash)}
+        new_keys = bkeys.join(prev["dkeys"], "k", "left_anti").localCheckpoint(
+            eager=False
+        )
+        return {
+            "dkeys": prev["dkeys"].unionByName(new_keys),
+            "words": prev["words"]
+            .unionByName(bloom_build_words(new_keys, m_bits, k_hash))
+            .groupBy("word_idx")
+            .agg(F.expr("bit_or(word)").alias("word")),
+        }
 
-        def _write(args: tuple) -> None:
-            df, path = args
-            df.write.mode("overwrite").parquet(path)
-
-        writes = [
-            (merged_keys, f"{dkeys_dir}/v={batch_id}"),
-            (merged_words, f"{words_dir}/v={batch_id}"),
-        ]
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            for fut in [pool.submit(_write, w) for w in writes]:
-                fut.result()
-        _prune_versions(dkeys_dir)
-        _prune_versions(words_dir)
-
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(
+        spark, stream, state_tables(state_dir), checkpoint_dir, _merge, batch_ids
+    ).awaitTermination()
 
 
 def bloom_state(spark: SparkSession, state_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(dkeys, words) — latest committed versions of the standing filter."""
-    dkeys_dir = os.path.join(state_dir, "dkeys")
-    words_dir = os.path.join(state_dir, "words")
-    vk = _latest_version(dkeys_dir)
-    vw = _latest_version(words_dir)
-    if vk is None or vw is None:
-        raise FileNotFoundError(f"no bloom state at {state_dir}")
-    return (
-        spark.read.parquet(f"{dkeys_dir}/v={vk}"),
-        spark.read.parquet(f"{words_dir}/v={vw}"),
-    )
+    """(dkeys, words) — the standing filter at the newest version
+    committed in both tables."""
+    state = read_state(spark, state_tables(state_dir))
+    return state["dkeys"], state["words"]
 
 
 def bloom_score_from_state(

@@ -14,10 +14,9 @@ statistics incrementally as documents arrive.  Both are ADDITIVE:
 
 Per-batch cost is |batch| tokenization + a |terms|-filtered posting
 append + a 2-row totals merge; state is postings-of-interest-sized
-regardless of stream length.  Versioning follows the keep-2
-replay-idempotent discipline of ``streaming/scd2.py`` (merge strictly
-below own batch id, overwrite own version) so a crash-replayed batch
-re-derives, never double-counts.
+regardless of stream length.  State follows the versioned discipline of
+``streaming/state.py``, so a crash-replayed batch re-derives, never
+double-counts.
 
 The gate: postings and totals are commutative monoids, so the state
 after any chunking equals the one-shot build, and the registered query
@@ -39,13 +38,23 @@ from twitter_followers_patterns_mapreduce_spark.operators.corpus import (
     BM25_QUERY_TERMS,
     bm25_topk_from_parts,
 )
-from twitter_followers_patterns_mapreduce_spark.streaming.graph import (
-    _latest_version,
-    _prune_versions,
+from twitter_followers_patterns_mapreduce_spark.streaming.state import (
+    Tables,
+    drain,
+    read_state,
+    tables,
 )
 
 #: Schema of staged incoming-document files.
 DOCS_SCHEMA = "doc_id LONG, text STRING"
+
+
+def state_tables(state_dir: str) -> Tables:
+    return tables(
+        state_dir,
+        postings="doc_id LONG, dl INT, token STRING, tf LONG",
+        totals="n_docs LONG, tot_toks LONG",
+    )
 
 
 def docs_text_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -89,41 +98,24 @@ def bm25_apply_stream(
 ) -> None:
     """Drain ``stream`` (availableNow) into the versioned index state.
     Blocks until drained."""
-    import os
 
-    postings_dir = os.path.join(state_dir, "postings")
-    totals_dir = os.path.join(state_dir, "totals")
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_ids is not None:
-            batch_ids.append(batch_id)
+    def _fold(batch_df: DataFrame, prev: dict[str, DataFrame] | None) -> dict[str, DataFrame]:
         bpost, btot = _batch_parts(batch_df, terms)
-        prev = _latest_version(totals_dir, below=batch_id)
-        if prev is not None:
-            old_post = spark.read.parquet(f"{postings_dir}/v={prev}")
-            old_tot = spark.read.parquet(f"{totals_dir}/v={prev}")
-            new_post = old_post.unionByName(bpost)
-            new_tot = (
-                old_tot.unionByName(btot)
-                .agg(
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                    F.sum("tot_toks").cast("long").alias("tot_toks"),
-                )
-            )
-        else:
-            new_post, new_tot = bpost, btot
-        new_post.write.mode("overwrite").parquet(f"{postings_dir}/v={batch_id}")
-        new_tot.write.mode("overwrite").parquet(f"{totals_dir}/v={batch_id}")
-        for d in (postings_dir, totals_dir):
-            _prune_versions(d)
+        if prev is None:
+            return {"postings": bpost, "totals": btot}
+        return {
+            "postings": prev["postings"].unionByName(bpost),
+            "totals": prev["totals"]
+            .unionByName(btot)
+            .agg(
+                F.sum("n_docs").cast("long").alias("n_docs"),
+                F.sum("tot_toks").cast("long").alias("tot_toks"),
+            ),
+        }
 
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(
+        spark, stream, state_tables(state_dir), checkpoint_dir, _fold, batch_ids
+    ).awaitTermination()
 
 
 def bm25_topk_from_state(
@@ -136,11 +128,5 @@ def bm25_topk_from_state(
     """BM25 top-k served FROM the maintained index — the scoring tail is
     the batch operator's own ``bm25_topk_from_parts``, reading state
     instead of rescanning the corpus."""
-    import os
-
-    v = _latest_version(os.path.join(state_dir, "totals"))
-    if v is None:
-        raise FileNotFoundError(f"no index state at {state_dir}")
-    postings = spark.read.parquet(f"{state_dir}/postings/v={v}")
-    totals = spark.read.parquet(f"{state_dir}/totals/v={v}")
-    return bm25_topk_from_parts(postings, totals, k=k, k1=k1, b=b)
+    state = read_state(spark, state_tables(state_dir))
+    return bm25_topk_from_parts(state["postings"], state["totals"], k=k, k1=k1, b=b)

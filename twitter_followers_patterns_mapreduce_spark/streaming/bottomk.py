@@ -12,10 +12,7 @@ chunked.  A rand()-reservoir cannot make that promise (its state
 depends on arrival order); the fixed-hash form is order-free, which is
 exactly what puts it under the cross-engine oracle gate.
 
-Durability: versioned ``v=<batch_id>`` dirs with strictly-below
-predecessor reads (the ``streaming/graph.py`` recipe) — a retried batch
-merges against its predecessor and overwrites its own version
-idempotently.
+State follows the versioned discipline of ``streaming/state.py``.
 """
 
 from __future__ import annotations
@@ -24,10 +21,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from twitter_followers_patterns_mapreduce_spark.functions.hashing import h64_sql
-from twitter_followers_patterns_mapreduce_spark.streaming.graph import (
-    _latest_version,
-    _prune_versions,
+from twitter_followers_patterns_mapreduce_spark.streaming.state import (
+    Tables,
+    drain,
+    read_state,
+    tables,
 )
+
+
+def state_tables(state_dir: str) -> Tables:
+    return tables(
+        state_dir, sample="event_id LONG, user_id LONG, event_type STRING, hk LONG"
+    )
 
 
 def sample_event_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -54,38 +59,19 @@ def bottomk_apply_stream(
     """Drain the stream with availableNow, maintaining bottom-k state."""
     h = h64_sql("CAST(event_id AS STRING)", "spark")
 
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        if batch_ids is not None:
-            batch_ids.append(batch_id)
-        prev = _latest_version(state_dir, below=batch_id)
+    def merge(batch: DataFrame, prev: dict[str, DataFrame] | None) -> dict[str, DataFrame]:
         delta = _bottomk(
             batch.selectExpr("event_id", "user_id", "event_type", f"{h} AS hk"), k
         )
-        out = (
-            delta
-            if prev is None
-            # mergeable: bottom-k of (previous state union batch bottom-k)
-            else _bottomk(
-                spark.read.schema(delta.schema).parquet(f"{state_dir}/v={prev}").unionAll(delta), k
-            )
-        )
-        out.write.mode("overwrite").parquet(f"{state_dir}/v={batch_id}")
-        _prune_versions(state_dir)
+        # mergeable: bottom-k of (previous state union batch bottom-k)
+        return {"sample": delta if prev is None else _bottomk(prev["sample"].unionAll(delta), k)}
 
-    (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(
+        spark, stream, state_tables(state_dir), checkpoint, merge, batch_ids
+    ).awaitTermination()
 
 
 def bottomk_from_view(spark: SparkSession, state_dir: str) -> DataFrame:
     """Read the maintained sample — identical output contract to the
     batch operator (event_id, user_id, event_type, hk)."""
-    v = _latest_version(state_dir)
-    if v is None:
-        raise FileNotFoundError(f"no sample state at {state_dir}")
-    return spark.read.parquet(f"{state_dir}/v={v}")
+    return read_state(spark, state_tables(state_dir))["sample"]

@@ -17,21 +17,24 @@ EXACT counts for all keys (|keys| state) because the stream must keep
 answering as data arrives.  Both end at the same exact answer — which
 is what puts this under the oracle gate.
 
-Durability: versioned ``v=<batch_id>`` dirs with ``_SUCCESS`` gating
-and strictly-below predecessor reads — a retried batch merges against
-its predecessor and overwrites its own version idempotently
-(restart-safe together with the stream checkpoint), exactly as
-``streaming/graph.py`` documents.
+State follows the versioned discipline of ``streaming/state.py``.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from twitter_followers_patterns_mapreduce_spark.streaming.graph import _latest_version, _prune_versions
+from twitter_followers_patterns_mapreduce_spark.streaming.state import (
+    Tables,
+    drain,
+    read_state,
+    tables,
+)
+
+
+def state_tables(state_dir: str) -> Tables:
+    return tables(state_dir, counts="user_id LONG, n_events LONG")
 
 
 def user_event_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -69,40 +72,21 @@ def counts_apply_stream(
 ) -> None:
     """Drain the stream with availableNow, maintaining the count view."""
 
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        if batch_ids is not None:
-            batch_ids.append(batch_id)
-        prev = _latest_version(state_dir, below=batch_id)
+    def merge(batch: DataFrame, prev: dict[str, DataFrame] | None) -> dict[str, DataFrame]:
         delta = batch.groupBy("user_id").agg(
             F.count("*").cast("long").alias("n_events")
         )
-        out = (
-            delta
-            if prev is None
-            else merge_user_counts(
-                spark.read.schema(delta.schema).parquet(f"{state_dir}/v={prev}"), delta
-            )
-        )
-        out.write.mode("overwrite").parquet(f"{state_dir}/v={batch_id}")
-        _prune_versions(state_dir)
+        return {"counts": delta if prev is None else merge_user_counts(prev["counts"], delta)}
 
-    (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(
+        spark, stream, state_tables(state_dir), checkpoint, merge, batch_ids
+    ).awaitTermination()
 
 
 def heavy_hitters_from_view(spark: SparkSession, state_dir: str, phi: float) -> DataFrame:
     """The φ-threshold query over the maintained count view — identical
     output contract to the batch operator (user_id, n_events, share)."""
-    v = _latest_version(state_dir)
-    if v is None:
-        raise FileNotFoundError(f"no count view at {state_dir}")
-    counts = spark.read.parquet(f"{state_dir}/v={v}")
+    counts = read_state(spark, state_tables(state_dir))["counts"]
     total = counts.agg(F.sum("n_events").cast("long").alias("n_total")).selectExpr(
         "n_total", "n_total - n_total AS _k"
     )

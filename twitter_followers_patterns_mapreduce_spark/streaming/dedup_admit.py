@@ -28,12 +28,9 @@ incremental, the way a production ingest pipeline would persist it:
     measure, computed from the SAME state read as the dedup verdict —
     the sixteenth gated streaming class).
 
-Versioning follows the keep-2 replay-idempotent discipline of
-``streaming/scd2.py``: each batch merges against the latest committed
-version STRICTLY BELOW its own batch_id and overwrites its own
-``v=<batch_id>`` dirs, so a crash-replayed batch re-derives (never
-duplicates) its output; after each commit only the newest two versions
-survive.  Restart-resume is pinned by tests/test_streaming_dedup.py.
+State follows the versioned discipline of ``streaming/state.py``, so a
+crash-replayed batch re-derives (never duplicates) its output.
+Restart-resume is pinned by tests/test_streaming_dedup.py.
 
 Semantics (what the staged DuckDB oracle
 ``operators/dedup.py::dedup_incremental_staged_oracle`` mirrors): each
@@ -57,8 +54,6 @@ MapReduce) is batch-only; this is extension surface (SURVEY.md §2.7).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -67,13 +62,26 @@ from twitter_followers_patterns_mapreduce_spark.operators.dedup import (
     MINHASH_K,
     _band_struct,
 )
-from twitter_followers_patterns_mapreduce_spark.streaming.graph import (
-    _latest_version,
-    _prune_versions,
+from twitter_followers_patterns_mapreduce_spark.streaming.state import (
+    Tables,
+    drain,
+    read_state,
+    tables,
 )
 
 #: Schema of staged incoming-document files.
 DOCS_SCHEMA = "doc_id LONG, text STRING"
+
+
+def state_tables(state_dir: str) -> Tables:
+    return tables(
+        state_dir,
+        corpus="doc_id LONG, h STRING, shingles ARRAY<LONG>, n_shingles INT",
+        bands="doc_id LONG, band INT, key STRING",
+        shingles="sh LONG",
+        verdicts="doc_id LONG, status STRING, near_dup_of LONG, jaccard DOUBLE",
+        novelty="doc_id LONG, status STRING, n_shingles LONG, n_seen LONG, novelty DOUBLE",
+    )
 
 
 def docs_file_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -264,37 +272,14 @@ def admit_apply_stream(
     checkpoint_dir: str,
     threshold: float = 0.5,
     batch_ids: list[int] | None = None,
-    timings: list[dict] | None = None,
 ) -> None:
     """Drain ``docs`` (availableNow) through versioned-state admission.
     ``bootstrap`` seeds the corpus when no prior state exists (its sigs
     are computed exactly once — by the first batch, or its crash
     replay).  Blocks until drained.  ``batch_ids`` (if given) collects
-    micro-batch ids — the multi-batch/restart test hook.  ``timings``
-    (if given) collects one dict per batch with wall-clock seconds per
-    phase (sig pass / judge / each state write / prune) — the
-    profiling hook behind SCALE.md's per-batch cost breakdown."""
-    corpus_dir = os.path.join(state_dir, "corpus")
-    bands_dir = os.path.join(state_dir, "bands")
-    verdicts_dir = os.path.join(state_dir, "verdicts")
-    shingles_dir = os.path.join(state_dir, "shingles")
-    novelty_dir = os.path.join(state_dir, "novelty")
+    micro-batch ids — the multi-batch/restart test hook."""
 
-    def _admit(batch_df: DataFrame, batch_id: int) -> None:
-        import time as _time
-
-        if batch_ids is not None:
-            batch_ids.append(batch_id)
-        rec: dict = {"batch": batch_id}
-        t0 = _time.time()
-
-        def _mark(key: str) -> None:
-            nonlocal t0
-            now = _time.time()
-            rec[key] = round(now - t0, 3)
-            t0 = now
-
-        prev = _latest_version(corpus_dir, below=batch_id)
+    def _admit(batch_df: DataFrame, prev: dict[str, DataFrame] | None) -> dict[str, DataFrame]:
         if prev is None:
             # bootstrap pays its single shingle+md5 pass once too: both
             # state views derive from one checkpointed projection.
@@ -319,26 +304,23 @@ def admit_apply_stream(
             prev_verdicts = None
             prev_novelty = None
         else:
-            corpus = spark.read.parquet(f"{corpus_dir}/v={prev}")
-            corpus_bands = spark.read.parquet(f"{bands_dir}/v={prev}")
-            corpus_sh = spark.read.parquet(f"{shingles_dir}/v={prev}")
-            prev_verdicts = spark.read.parquet(f"{verdicts_dir}/v={prev}")
-            prev_novelty = spark.read.parquet(f"{novelty_dir}/v={prev}")
+            corpus = prev["corpus"]
+            corpus_bands = prev["bands"]
+            corpus_sh = prev["shingles"]
+            prev_verdicts = prev["verdicts"]
+            prev_novelty = prev["novelty"]
         # ONE shingle+md5 pass per micro-batch: the checkpointed state
         # table is referenced by the exact check, the band join, the
         # verification join, the admitted fold AND the contamination
         # report (the earlier two-helper shape ran the shingle pipeline
         # twice per batch)
-        _mark("state_resolve")
         batch_state = _state_table(batch_df).localCheckpoint(eager=True)
-        _mark("sig_pass")
         batch_sigs = _sig_table(batch_state)
         batch_bands = _band_rows(batch_state)
 
         verdicts = _judge_batch(
             batch_sigs, batch_bands, corpus, corpus_bands, threshold
         ).localCheckpoint(eager=True)
-        _mark("judge")
         kept = verdicts.where(F.col("status") == "kept").select("doc_id")
 
         # contamination in the SAME pass (the production ingest gate is
@@ -395,61 +377,25 @@ def admit_apply_stream(
             if prev_novelty is None
             else prev_novelty.unionByName(novelty)
         )
-        _mark("plan_rest")
-        # the five per-version writes are INDEPENDENT jobs over already
-        # checkpointed/parquet inputs — submit them concurrently (Spark
-        # schedules jobs from multiple threads fine) instead of paying
-        # five sequential job latencies: the round-11 profile measured
-        # sequential writes at ~1.5-1.9 s of a ~3.4 s batch (writes
-        # dominated), parallel at ~max(single write) (SCALE.md table)
-        from concurrent.futures import ThreadPoolExecutor
+        return {
+            "corpus": new_corpus,
+            "bands": new_bands,
+            "shingles": new_sh,
+            "verdicts": new_verdicts,
+            "novelty": new_novelty,
+        }
 
-        def _write(args: tuple) -> tuple:
-            df, d, key = args
-            t = _time.time()
-            df.write.mode("overwrite").parquet(f"{d}/v={batch_id}")
-            return key, round(_time.time() - t, 3)
-
-        writes = [
-            (new_corpus, corpus_dir, "w_corpus"),
-            (new_bands, bands_dir, "w_bands"),
-            (new_sh, shingles_dir, "w_shingles"),
-            (new_verdicts, verdicts_dir, "w_verdicts"),
-            (new_novelty, novelty_dir, "w_novelty"),
-        ]
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            for key, dt in pool.map(_write, writes):
-                rec[key] = dt
-        _mark("writes_wall")
-        for d in (corpus_dir, bands_dir, shingles_dir, verdicts_dir, novelty_dir):
-            _prune_versions(d)
-        _mark("prune")
-        if timings is not None:
-            timings.append(rec)
-
-    q = (
-        docs.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(
+        spark, docs, state_tables(state_dir), checkpoint_dir, _admit, batch_ids
+    ).awaitTermination()
 
 
 def verdicts_from_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """The cumulative admission log — latest committed version."""
-    verdicts_dir = os.path.join(state_dir, "verdicts")
-    v = _latest_version(verdicts_dir)
-    if v is None:
-        raise FileNotFoundError(f"no admission state at {verdicts_dir}")
-    return spark.read.parquet(f"{verdicts_dir}/v={v}")
+    return read_state(spark, state_tables(state_dir))["verdicts"]
 
 
 def novelty_from_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """The cumulative one-pass ingest-gate log — (doc_id, status,
     n_shingles, n_seen, novelty) per arrival, latest committed version."""
-    novelty_dir = os.path.join(state_dir, "novelty")
-    v = _latest_version(novelty_dir)
-    if v is None:
-        raise FileNotFoundError(f"no novelty state at {novelty_dir}")
-    return spark.read.parquet(f"{novelty_dir}/v={v}")
+    return read_state(spark, state_tables(state_dir))["novelty"]

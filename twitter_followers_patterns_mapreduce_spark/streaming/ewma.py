@@ -12,10 +12,7 @@ per micro-batch, never a rescan of event history) and re-derives the
 kernel output from state on read: the classic IVM split of
 "maintain the self-maintainable grain, recompute the cheap derivation".
 
-Durability contract is the shared one (``graph.py`` / ``counts.py`` /
-``scd2.py``): versioned ``v=<batch_id>`` dirs gated by ``_SUCCESS``,
-each batch merging against the latest version STRICTLY BELOW its own
-id (replay-idempotent), pruned to the newest two committed versions.
+State follows the versioned discipline of ``streaming/state.py``.
 
 Exactness: state carries the DECIMAL(38,6) value sum and its
 1e-6-scaled BIGINT twin; decimal/integer addition is associative, so
@@ -33,10 +30,19 @@ from twitter_followers_patterns_mapreduce_spark.operators.events import (
     ewma_from_buckets,
     hourly_value_buckets,
 )
-from twitter_followers_patterns_mapreduce_spark.streaming.graph import (
-    _latest_version,
-    _prune_versions,
+from twitter_followers_patterns_mapreduce_spark.streaming.state import (
+    Tables,
+    drain,
+    read_state,
+    tables,
 )
+
+
+def state_tables(state_dir: str) -> Tables:
+    return tables(
+        state_dir,
+        buckets="event_type STRING, h LONG, n_events LONG, s DECIMAL(38,6), s6 LONG",
+    )
 
 
 def ewma_event_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -77,33 +83,17 @@ def ewma_apply_stream(
     """Drain ``events_stream`` (availableNow) into the hourly bucket
     view under ``state_dir/v=<batch_id>``.  Blocks until drained."""
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_ids is not None:
-            batch_ids.append(batch_id)
+    def _merge(batch_df: DataFrame, prev: dict[str, DataFrame] | None) -> dict[str, DataFrame]:
         delta = hourly_value_buckets(batch_df)
-        prev = _latest_version(state_dir, below=batch_id)
-        out = (
-            delta
-            if prev is None
-            else _merge_buckets(spark.read.parquet(f"{state_dir}/v={prev}"), delta)
-        )
-        out.write.mode("overwrite").parquet(f"{state_dir}/v={batch_id}")
-        _prune_versions(state_dir)
+        return {"buckets": delta if prev is None else _merge_buckets(prev["buckets"], delta)}
 
-    q = (
-        events_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(
+        spark, events_stream, state_tables(state_dir), checkpoint_dir, _merge, batch_ids
+    ).awaitTermination()
 
 
 def read_ewma_view(spark: SparkSession, state_dir: str) -> DataFrame:
     """The current EWMA output: kernel stage re-derived from the latest
     committed bucket state (identical to the batch plan by shared code).
     """
-    v = _latest_version(state_dir)
-    if v is None:
-        raise FileNotFoundError(f"no EWMA bucket state at {state_dir}")
-    return ewma_from_buckets(spark.read.parquet(f"{state_dir}/v={v}"))
+    return ewma_from_buckets(read_state(spark, state_tables(state_dir))["buckets"])

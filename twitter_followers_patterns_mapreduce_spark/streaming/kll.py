@@ -10,11 +10,8 @@ quantile structure at 100 TB/day: state is one fixed-size sketch (k=200
 |batch| + one 2-row merge.  Exact ``percentile`` as streaming state
 would hold every value ever seen.
 
-State follows the keep-2 replay-idempotent version discipline of
-``streaming/scd2.py``: one (sk BINARY, n BIGINT) row per committed
-``v=<batch_id>`` dir, each batch merging against the version strictly
-below its own id, so a crash-replayed batch re-derives (never
-double-counts) its contribution.
+State is one (sk BINARY, n BIGINT) row per version, under the
+versioned discipline of ``streaming/state.py``.
 
 The gate: the final state sketch's quantile estimates must satisfy the
 SAME rank-error band as the batch build (est(q) ∈ [exact(q−ε),
@@ -29,13 +26,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from twitter_followers_patterns_mapreduce_spark.streaming.graph import (
-    _latest_version,
-    _prune_versions,
+from twitter_followers_patterns_mapreduce_spark.streaming.state import (
+    Tables,
+    drain,
+    read_state,
+    tables,
 )
 
 #: Schema of staged value-feed files.
 VALUE_SCHEMA = "event_id LONG, value DOUBLE"
+
+
+def state_tables(state_dir: str) -> Tables:
+    return tables(state_dir, sketch="sk BINARY, n LONG")
 
 
 def value_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -58,32 +61,23 @@ def kll_apply_stream(
     per batch, one |batch|-local sketch agg + a ≤2-row merge agg.
     Blocks until drained."""
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_ids is not None:
-            batch_ids.append(batch_id)
+    def _merge(batch_df: DataFrame, prev: dict[str, DataFrame] | None) -> dict[str, DataFrame]:
         bsk = batch_df.selectExpr("CAST(value AS DOUBLE) AS x").agg(
             F.expr("kll_sketch_agg_double(x)").alias("sk"),
             F.expr("CAST(COUNT(*) AS BIGINT)").alias("n"),
         )
-        prev = _latest_version(state_dir, below=batch_id)
-        if prev is not None:
-            old = spark.read.parquet(f"{state_dir}/v={prev}")
-            merged = old.select("sk", "n").unionByName(bsk).agg(
+        if prev is None:
+            return {"sketch": bsk}
+        return {
+            "sketch": prev["sketch"].unionByName(bsk).agg(
                 F.expr("kll_merge_agg_double(sk)").alias("sk"),
                 F.expr("CAST(SUM(n) AS BIGINT)").alias("n"),
             )
-        else:
-            merged = bsk
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v={batch_id}")
-        _prune_versions(state_dir)
+        }
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(
+        spark, stream, state_tables(state_dir), checkpoint_dir, _merge, batch_ids
+    ).awaitTermination()
 
 
 def kll_profile_from_state(
@@ -104,10 +98,7 @@ def kll_profile_from_state(
     )
 
     probes = probes or _KLL_PROBES
-    v = _latest_version(state_dir)
-    if v is None:
-        raise FileNotFoundError(f"no KLL state at {state_dir}")
-    state = spark.read.parquet(f"{state_dir}/v={v}").select("sk")
+    state = read_state(spark, state_tables(state_dir))["sketch"].select("sk")
     lohiq = []
     for q in probes:
         lohiq += [max(0.0, q - eps), q, min(1.0, q + eps)]

@@ -10,10 +10,7 @@ aggregates its slice to |sources| rows and folds them into the standing
 Per-batch cost is |batch| + |sources|; state is |sources| rows
 regardless of stream length — the cheapest possible standing mixture.
 
-State follows the keep-2 replay-idempotent version discipline of
-``streaming/scd2.py``: each batch merges against the version strictly
-below its own id and overwrites its own ``v=<batch_id>``, so a
-crash-replayed batch re-derives (never double-counts) its slice.
+State follows the versioned discipline of ``streaming/state.py``.
 
 The gate: per-source totals form a commutative monoid, so the streamed
 state is ORDER-FREE and equals the one-shot aggregate over the full
@@ -31,13 +28,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from twitter_followers_patterns_mapreduce_spark.streaming.graph import (
-    _latest_version,
-    _prune_versions,
+from twitter_followers_patterns_mapreduce_spark.streaming.state import (
+    Tables,
+    drain,
+    read_state,
+    tables,
 )
 
 #: Schema of staged document-feed files (the mixture needs no text).
 DOCS_MIX_SCHEMA = "doc_id LONG, source STRING, n_chars LONG"
+
+
+def state_tables(state_dir: str) -> Tables:
+    return tables(state_dir, sources="source STRING, n_docs LONG, n_chars LONG")
 
 
 def docs_mix_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -67,33 +70,23 @@ def mixture_apply_stream(
     state: per batch, one |batch| aggregation + a 2·|sources|-row
     merge aggregation.  Blocks until drained."""
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_ids is not None:
-            batch_ids.append(batch_id)
+    def _merge(batch_df: DataFrame, prev: dict[str, DataFrame] | None) -> dict[str, DataFrame]:
         bstate = _source_counts(batch_df)
-        prev = _latest_version(state_dir, below=batch_id)
-        if prev is not None:
-            old = spark.read.parquet(f"{state_dir}/v={prev}")
-            merged = (
-                old.unionByName(bstate)
-                .groupBy("source")
-                .agg(
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                    F.sum("n_chars").cast("long").alias("n_chars"),
-                )
+        if prev is None:
+            return {"sources": bstate}
+        return {
+            "sources": prev["sources"]
+            .unionByName(bstate)
+            .groupBy("source")
+            .agg(
+                F.sum("n_docs").cast("long").alias("n_docs"),
+                F.sum("n_chars").cast("long").alias("n_chars"),
             )
-        else:
-            merged = bstate
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v={batch_id}")
-        _prune_versions(state_dir)
+        }
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(
+        spark, stream, state_tables(state_dir), checkpoint_dir, _merge, batch_ids
+    ).awaitTermination()
 
 
 def mixture_recipe_from_state(
@@ -105,9 +98,6 @@ def mixture_recipe_from_state(
         mixture_recipe_from_counts,
     )
 
-    v = _latest_version(state_dir)
-    if v is None:
-        raise FileNotFoundError(f"no mixture state at {state_dir}")
     return mixture_recipe_from_counts(
-        spark.read.parquet(f"{state_dir}/v={v}"), keep_div
+        read_state(spark, state_tables(state_dir))["sources"], keep_div
     )

@@ -15,19 +15,9 @@ so any batching of the same feed converges to the same table — pinned
 by the shared DuckDB oracle (stream == batch == oracle) and by
 ``tests/test_streaming_scd2.py``.
 
-Replay-idempotent by construction (same contract as ``counts.py`` /
-``graph.py``): state lives in versioned ``v=<batch_id>`` dirs gated by
-parquet ``_SUCCESS`` markers.  A batch merges against the latest
-version STRICTLY BELOW its own batch_id and overwrites its own version
-dir — so a batch replayed after a crash between state write and
-checkpoint commit re-derives from the same predecessor and re-produces
-(not duplicates) its output.  Retention: after each committed write
-only the newest two versions are kept (``_prune_versions`` — the new
-version plus the predecessor a crash-replay merges against), so disk
-stays O(2 × dimension), not O(batches).  The previous
-delete-``current``-then-rename scheme was not replay-idempotent: a replayed batch would re-unfold already-merged
-rows and union the batch rows a second time, and a crash inside the
-rmtree/rename window could lose the state dir entirely.
+State follows the versioned discipline of ``streaming/state.py``; a
+batch replayed after a crash re-folds from the same predecessor, so it
+never unfolds already-merged rows or unions its own rows twice.
 
 Why ``foreachBatch`` and not a stateful operator: interval folding
 needs a per-key window over ALL versions accumulated so far — streaming
@@ -50,10 +40,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from twitter_followers_patterns_mapreduce_spark.operators.relational import fold_scd2
-from twitter_followers_patterns_mapreduce_spark.streaming.graph import _latest_version, _prune_versions
+from twitter_followers_patterns_mapreduce_spark.streaming.state import (
+    Tables,
+    drain,
+    read_state,
+    tables,
+)
 
 #: Schema of staged feed files (vf matches the parquet o_orderdate type).
 FEED_SCHEMA = "o_orderkey LONG, version INT, priority STRING, vf TIMESTAMP_NTZ"
+
+
+def state_tables(state_dir: str) -> Tables:
+    return tables(
+        state_dir,
+        dim="o_orderkey LONG, version INT, priority STRING, valid_from STRING,"
+        " valid_to STRING, is_current BOOLEAN",
+    )
 
 
 def scd2_feed_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -67,11 +70,8 @@ def scd2_feed_stream(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_scd2_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The current SCD2 dimension — latest committed ``v=<id>`` dir."""
-    v = _latest_version(state_dir)
-    if v is None:
-        raise FileNotFoundError(f"no SCD2 state at {state_dir}")
-    return spark.read.parquet(f"{state_dir}/v={v}")
+    """The current SCD2 dimension — latest committed version."""
+    return read_state(spark, state_tables(state_dir))["dim"]
 
 
 def scd2_apply_stream(
@@ -86,39 +86,25 @@ def scd2_apply_stream(
     until drained.  ``batch_ids`` (if given) collects the micro-batch
     ids that ran — test hook proving multi-batch incrementality."""
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_ids is not None:
-            batch_ids.append(batch_id)
+    def _merge(batch_df: DataFrame, prev: dict[str, DataFrame] | None) -> dict[str, DataFrame]:
         new_rows = batch_df.select(
             "o_orderkey", "version", "priority", F.col("vf").cast("timestamp_ntz")
         )
-        # strictly-below: a RETRIED batch (state written, checkpoint not
-        # yet committed, crash, replay with the same batch_id) must merge
-        # against its predecessor, never read its own half-committed
-        # output — that replay is exactly what makes the version idempotent
-        prev = _latest_version(state_dir, below=batch_id)
-        if prev is not None:
-            state = spark.read.parquet(f"{state_dir}/v={prev}")
-            keys = new_rows.select("o_orderkey").distinct()
-            untouched = state.join(F.broadcast(keys), "o_orderkey", "left_anti")
-            # un-fold touched keys' intervals back to feed rows; the
-            # re-fold recomputes their valid_to/is_current from scratch
-            old_feed = state.join(F.broadcast(keys), "o_orderkey", "left_semi").select(
-                "o_orderkey",
-                "version",
-                "priority",
-                F.col("valid_from").cast("timestamp_ntz").alias("vf"),
-            )
-            out = untouched.unionByName(fold_scd2(old_feed.unionByName(new_rows)))
-        else:
-            out = fold_scd2(new_rows)
-        out.write.mode("overwrite").parquet(f"{state_dir}/v={batch_id}")
-        _prune_versions(state_dir)
+        if prev is None:
+            return {"dim": fold_scd2(new_rows)}
+        state = prev["dim"]
+        keys = new_rows.select("o_orderkey").distinct()
+        untouched = state.join(F.broadcast(keys), "o_orderkey", "left_anti")
+        # un-fold touched keys' intervals back to feed rows; the
+        # re-fold recomputes their valid_to/is_current from scratch
+        old_feed = state.join(F.broadcast(keys), "o_orderkey", "left_semi").select(
+            "o_orderkey",
+            "version",
+            "priority",
+            F.col("valid_from").cast("timestamp_ntz").alias("vf"),
+        )
+        return {"dim": untouched.unionByName(fold_scd2(old_feed.unionByName(new_rows)))}
 
-    q = (
-        feed.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(
+        spark, feed, state_tables(state_dir), checkpoint_dir, _merge, batch_ids
+    ).awaitTermination()

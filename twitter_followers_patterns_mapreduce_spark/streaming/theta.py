@@ -11,15 +11,13 @@ per-partition sketches roll up at 100 TB without re-reading history
 (the batch-side consumers: ``events_theta_retention``,
 ``events_sliding_distinct_theta``, ``join_key_overlap_theta``).
 
-State follows the keep-2 replay-idempotent version discipline
-(``streaming/scd2.py``): one (sk BINARY) row per committed
-``v=<batch_id>`` dir, each batch merging against the version strictly
-below its own id.  lgK=14 (16384 nominal entries) is sized to the
-largest gated SF — sf0.1 has 1.5k distinct users (exact mode) and even
-sf1's 15k stays below nominal; past exact mode rsd ≈ 0.8%, so the 8%
-readout bound is ~10σ and the oracle's TRUE pin survives estimation
-mode (the round-9 default-k hazard, handled the same way as
-events.py::sliding_distinct_theta).
+State is one (sk BINARY) row per version, under the versioned
+discipline of ``streaming/state.py``.  lgK=14 (16384 nominal entries)
+is sized to the largest gated SF — sf0.1 has 1.5k distinct users (exact
+mode) and even sf1's 15k stays below nominal; past exact mode rsd ≈
+0.8%, so the 8% readout bound is ~10σ and the oracle's TRUE pin
+survives estimation mode (the round-9 default-k hazard, handled the
+same way as events.py::sliding_distinct_theta).
 
 The gate: the drained sketch's estimate must sit within
 max(rel_tol·exact, 2) of the exact distinct computed from the replayed
@@ -31,9 +29,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from twitter_followers_patterns_mapreduce_spark.streaming.graph import (
-    _latest_version,
-    _prune_versions,
+from twitter_followers_patterns_mapreduce_spark.streaming.state import (
+    Tables,
+    drain,
+    read_state,
+    tables,
 )
 
 #: lgK shared by every agg/union in this module AND sized to the
@@ -42,6 +42,10 @@ THETA_LGK = 14
 
 #: Schema of staged key-feed files.
 KEY_SCHEMA = "event_id LONG, user_id LONG"
+
+
+def state_tables(state_dir: str) -> Tables:
+    return tables(state_dir, sketch="sk BINARY")
 
 
 def key_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -64,30 +68,21 @@ def theta_apply_stream(
     per batch, one |batch|-local sketch agg + a ≤2-row union agg.
     Blocks until drained."""
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_ids is not None:
-            batch_ids.append(batch_id)
+    def _merge(batch_df: DataFrame, prev: dict[str, DataFrame] | None) -> dict[str, DataFrame]:
         bsk = batch_df.agg(
             F.expr(f"theta_sketch_agg(user_id, {THETA_LGK})").alias("sk")
         )
-        prev = _latest_version(state_dir, below=batch_id)
-        if prev is not None:
-            old = spark.read.parquet(f"{state_dir}/v={prev}")
-            merged = old.select("sk").unionByName(bsk).agg(
+        if prev is None:
+            return {"sketch": bsk}
+        return {
+            "sketch": prev["sketch"].unionByName(bsk).agg(
                 F.expr(f"theta_union_agg(sk, {THETA_LGK})").alias("sk")
             )
-        else:
-            merged = bsk
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v={batch_id}")
-        _prune_versions(state_dir)
+        }
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(
+        spark, stream, state_tables(state_dir), checkpoint_dir, _merge, batch_ids
+    ).awaitTermination()
 
 
 def distinct_from_state(
@@ -100,10 +95,7 @@ def distinct_from_state(
     """(n_users, ok) readout: exact COUNT(DISTINCT) from the replayed
     table (the gate's cost) next to the drained sketch's estimate,
     asserted within max(rel_tol·exact, 2)."""
-    v = _latest_version(state_dir)
-    if v is None:
-        raise FileNotFoundError(f"no theta state at {state_dir}")
-    state = spark.read.parquet(f"{state_dir}/v={v}").selectExpr(
+    state = read_state(spark, state_tables(state_dir))["sketch"].selectExpr(
         "theta_sketch_estimate(sk) AS est"
     )
     exact = df.agg(

@@ -22,9 +22,7 @@ graph's closures are never recounted.  The edge state is rewritten as
 |old ∪ D| beside it (the full-state parquet rewrite per version is the
 documented vanilla-Spark stand-in for a table-format MERGE, as in
 ``streaming/dedup_admit.py``).  Cross-batch duplicate arrivals are
-admitted exactly once: the anti-join makes D genuinely new.  State is
-read with explicit schemas, so no version read pays a parquet-footer
-schema-inference job.
+admitted exactly once: the anti-join makes D genuinely new.
 
 Order-independence gate: the final edge state is a SET (union is
 commutative) and the maintained count is exact at every step, so the
@@ -33,21 +31,16 @@ set under ANY chunking — the registered query therefore shares the
 full-recompute SQL oracle directly, with the exact recount emitted as
 the ``consistent`` companion boolean (the sketch-op discipline).
 
-State follows the keep-2 replay-idempotent version discipline of
-``streaming/graph.py``: each batch merges against the newest version
-strictly below its own id that is committed in BOTH tables and
-overwrites its own ``v=<batch_id>``, so a crash-replayed batch
-re-derives (never double-counts) its delta, and a crash between the two
-writes never pairs one batch's edges with another's count.
+State follows the versioned discipline of ``streaming/state.py``, so a
+crash-replayed batch re-derives (never double-counts) its delta, and a
+crash between the two writes never pairs one batch's edges with
+another's count.
 
 Reference parity note: the reference (Twitter-Followers-Patterns
 MapReduce) is batch-only; this is extension surface (SURVEY.md §2.7).
 """
 
 from __future__ import annotations
-
-import os
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,15 +49,21 @@ from twitter_followers_patterns_mapreduce_spark.operators.graph import (
     closure_count,
     delta_closures,
 )
-from twitter_followers_patterns_mapreduce_spark.streaming.graph import (
-    _latest_common_version,
-    _prune_versions,
+from twitter_followers_patterns_mapreduce_spark.streaming.state import (
+    Tables,
+    drain,
+    read_state,
+    tables,
 )
 
 #: Schema of staged edge-feed files and of the ``edges/v=`` state.
 EDGE_TRI_SCHEMA = "src LONG, dst LONG"
 #: Schema of the ``count/v=`` state.
 COUNT_TRI_SCHEMA = "t_raw LONG"
+
+
+def state_tables(state_dir: str) -> Tables:
+    return tables(state_dir, edges=EDGE_TRI_SCHEMA, count=COUNT_TRI_SCHEMA)
 
 
 def edges_tri_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -94,31 +93,24 @@ def triangles_apply_stream(
     one tagged delta-closure pass folded with the old count into one
     SUM, and two independent state writes (submitted in parallel
     threads).  Blocks until drained."""
-    edges_dir = os.path.join(state_dir, "edges")
-    count_dir = os.path.join(state_dir, "count")
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_ids is not None:
-            batch_ids.append(batch_id)
+    def _merge(batch_df: DataFrame, prev: dict[str, DataFrame] | None) -> dict[str, DataFrame]:
         b = (
             batch_df.where(F.col("src") != F.col("dst"))
             .select("src", "dst")
             .distinct()
         )
-        prev = _latest_common_version([edges_dir, count_dir], below=batch_id)
         if prev is None:
             old_edges = _empty_edges(spark)
             old_count = spark.range(1).selectExpr("CAST(0 AS BIGINT) AS t_raw")
         else:
-            old_edges = spark.read.schema(EDGE_TRI_SCHEMA).parquet(f"{edges_dir}/v={prev}")
-            old_count = spark.read.schema(COUNT_TRI_SCHEMA).parquet(f"{count_dir}/v={prev}")
+            old_edges, old_count = prev["edges"], prev["count"]
         # only genuinely-new edges count (and re-arrivals are no-ops);
         # lazy checkpoint: D feeds the closure pass, U's tag and the
         # union write
         d = b.join(old_edges, ["src", "dst"], "left_anti").localCheckpoint(
             eager=False
         )
-        u = old_edges.unionByName(d)
         tagged = old_edges.withColumn("in_d", F.lit(False)).unionByName(
             d.withColumn("in_d", F.lit(True))
         )
@@ -129,30 +121,11 @@ def triangles_apply_stream(
             .unionByName(delta_closures(d, tagged).select("w"))
             .agg(F.sum("w").cast("long").alias("t_raw"))
         )
+        return {"edges": old_edges.unionByName(d), "count": new_count}
 
-        # the two versioned writes are independent once D is fixed —
-        # submit both, fail the batch if either write fails
-        def _write(args: tuple) -> None:
-            df, path = args
-            df.write.mode("overwrite").parquet(path)
-
-        writes = [
-            (u, f"{edges_dir}/v={batch_id}"),
-            (new_count, f"{count_dir}/v={batch_id}"),
-        ]
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            for fut in [pool.submit(_write, w) for w in writes]:
-                fut.result()
-        _prune_versions(edges_dir)
-        _prune_versions(count_dir)
-
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(
+        spark, stream, state_tables(state_dir), checkpoint_dir, _merge, batch_ids
+    ).awaitTermination()
 
 
 def triangle_view_from_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -162,13 +135,9 @@ def triangle_view_from_state(spark: SparkSession, state_dir: str) -> DataFrame:
     skip the recount; the gate is the point here.  Both tables are read
     at the newest version committed in both, so a crash between a
     batch's two writes shows the previous batch, never a torn pair."""
-    edges_dir = os.path.join(state_dir, "edges")
-    count_dir = os.path.join(state_dir, "count")
-    v = _latest_common_version([edges_dir, count_dir])
-    if v is None:
-        raise FileNotFoundError(f"no triangle state at {state_dir}")
-    edges = spark.read.schema(EDGE_TRI_SCHEMA).parquet(f"{edges_dir}/v={v}")
-    maintained = spark.read.schema(COUNT_TRI_SCHEMA).parquet(f"{count_dir}/v={v}").selectExpr(
+    state = read_state(spark, state_tables(state_dir))
+    edges = state["edges"]
+    maintained = state["count"].selectExpr(
         "t_raw", "t_raw - t_raw AS _k"
     )
     recount = closure_count(edges, edges, edges).selectExpr(
