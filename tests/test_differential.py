@@ -68,11 +68,22 @@ def test_exact_equals_materialized_count(spark, seed):
     assert one(G.two_hop_count_exact(e)) == G.two_hop_paths(e, 10**9).count()
 
 
-@pytest.mark.parametrize("seed", [7, 42, 1234])
-def test_rs_equals_rj_equals_python(spark, seed):
-    """Shuffle and broadcast triangle variants agree with each other and
-    with the Python oracle (the reference's own differential check)."""
+def multigraph_edges(seed: int) -> list[tuple[int, int]]:
+    """``random_edges(seed)`` with every 5th edge doubled and 5 self-loops."""
     edges = random_edges(seed)
+    return edges + edges[::5] + [(v, v) for v in range(5)]
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [pytest.param(random_edges(s), id=str(s)) for s in (7, 42, 1234)]
+    + [pytest.param(multigraph_edges(7), id="multigraph")],
+)
+def test_rs_equals_rj_equals_python(spark, edges):
+    """Shuffle and broadcast triangle variants agree with each other and
+    with the Python oracle (the reference's own differential check).  On
+    the multigraph a path counts with its multiplicity and its closing
+    edge only by existence: the closure is a semi-join."""
     e = make_edges(spark, edges)
     want = py_triangle_raw(edges)
     assert one(G.triangle_count_raw(e, 10**9, strategy="shuffle")) == want

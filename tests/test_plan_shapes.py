@@ -343,6 +343,64 @@ def test_rs_rj_join_strategies(spark):
     assert "BroadcastHashJoin" in rj  # Rep-join = replicated/broadcast
 
 
+#: (Exchange nodes, [(join, join type, build side)] top-down) of the
+#: initial executed plans of the benchmarked wedge jobs over a parquet
+#: edge file, with size-based broadcasts off so that every broadcast is
+#: one the code asks for: the fan-out RoundRobin exchange under the
+#: 2-path probe, the min-rotation BuildRight broadcast pin, and the
+#: RS/RJ hints on the closing semi-join.
+_SEMI_SHUFFLE = ("ShuffledHashJoin", "LeftSemi", "BuildRight")
+_SEMI_BROADCAST = ("BroadcastHashJoin", "LeftSemi", "BuildRight")
+_SEMI_AUTO = ("SortMergeJoin", "LeftSemi", "")
+_WEDGE = ("SortMergeJoin", "Inner", "")
+_WEDGE_PINNED = ("BroadcastHashJoin", "Inner", "BuildRight")
+WEDGE_PLAN_SHAPES = {
+    ("two_hop_count_approx", None, None): (4, [_WEDGE]),
+    ("triangle_count_raw", "shuffle", False): (6, [_SEMI_SHUFFLE, _WEDGE]),
+    ("triangle_count_raw", "shuffle", True): (5, [_SEMI_SHUFFLE, _WEDGE_PINNED]),
+    ("triangle_count_raw", "broadcast", False): (5, [_SEMI_BROADCAST, _WEDGE]),
+    ("triangle_count_raw", "broadcast", True): (4, [_SEMI_BROADCAST, _WEDGE_PINNED]),
+    ("triangle_count_raw", "auto", False): (6, [_SEMI_AUTO, _WEDGE]),
+    ("triangle_count_raw", "auto", True): (5, [_SEMI_AUTO, _WEDGE_PINNED]),
+}
+
+
+def test_wedge_job_plan_shapes(spark, tmp_path):
+    """Plan-only (nothing runs): exchanges, join operators and build
+    sides of two_hop_count_approx and triangle_count_raw under every
+    strategy × min_rotation."""
+    import random
+    import re
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from twitter_followers_patterns_mapreduce_spark.operators import graph as G
+    from twitter_followers_patterns_mapreduce_spark.sources.readers import EDGE_SCHEMA
+
+    rnd = random.Random(3)
+    pairs = [(rnd.randrange(300), rnd.randrange(300)) for _ in range(2000)]
+    path = str(tmp_path / "edges.parquet")
+    pq.write_table(pa.table({"src": [a for a, _ in pairs], "dst": [b for _, b in pairs]}), path)
+    edges = spark.read.schema(EDGE_SCHEMA).parquet(path)
+
+    got = {}
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        for fn, strategy, min_rotation in WEDGE_PLAN_SHAPES:
+            kwargs = {} if strategy is None else {"strategy": strategy, "min_rotation": min_rotation}
+            plan = getattr(G, fn)(edges, **kwargs)._jdf.queryExecution().executedPlan().toString()
+            exchanges = sum(
+                1 for line in plan.splitlines() if re.match(r"^[\s:|+-]*(Broadcast)?Exchange ", line)
+            )
+            joins = re.findall(r"(\w+Join) \[[^\]]*\], \[[^\]]*\], (\w+)(?:, (Build\w+))?", plan)
+            got[fn, strategy, min_rotation] = (exchanges, joins)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert got == WEDGE_PLAN_SHAPES
+
+
 @pytest.mark.parametrize("name", ["dedup_minhash_lsh", "dedup_simhash_pairs", "embedding_top_pairs_lsh"])
 def test_lsh_paths_are_equi_joins(spark, name):
     plan = plan_of(spark, name)

@@ -20,6 +20,22 @@ hand-rolled machinery maps as:
   Hadoop global Counters → stdout              → 1-row aggregate DataFrames
   job-chained Temp materialization (``:204``)  → one DAG, in-memory shuffle
 
+One wedge-closure kernel serves the directed triangle family (AP/RS/RJ,
+the closure recounts, the IVM delta pass and the motif census):
+:func:`_two_paths` builds the 2-paths x→y→z (RS job 1,
+``rsjoin/RSJoinTriangleCount.java:102``) and :func:`_closed` probes each
+for its closing edge z→x (``:168-186``).  The closing join is a
+LEFT-SEMI for the RS raw count — a path counts once however many
+copies of its closing edge exist, the reference's ``hasEdge`` flag —
+and INNER wherever the edge set is distinct, so the closing row can
+carry columns (``delta_closures``' ``f3``).  RS, RJ and auto are not
+kernel branches: they are the hint the caller puts on the closing
+frame (``e.hint("shuffle_hash")``, ``F.broadcast(e)``, none), just as
+fan-out, hints and filters on the path inputs are the caller's.  Both
+joins are ON-conditions over aliased frames renamed after the join: a
+rename before the join puts Projects under the exchanges and makes the
+broadcast keys nullable.
+
 Scale notes (100 TB): the exact count NEVER materializes paths — it is
 the degree-product rewrite (one shuffle over 2|E| rows, partial
 aggregation map-side).  Path materialization is O(Σ indeg·outdeg),
@@ -29,7 +45,10 @@ the reference does, and AQE skew-join handles power-law keys.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import operator
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from twitter_followers_patterns_mapreduce_spark.functions.hashing import h64_sql
@@ -95,6 +114,53 @@ def two_hop_count_exact(edges: DataFrame, max_limit: int | None = None) -> DataF
     )
 
 
+# ---------------------------------------------------------------------------
+# The wedge-closure kernel: every directed triangle operator below builds
+# its 2-paths with _two_paths and closes them with _closed
+# ---------------------------------------------------------------------------
+
+_KEYS = ("src", "dst")
+
+
+def _carried(df: DataFrame, alias: str) -> list[Column]:
+    """``df``'s non-key columns, qualified by ``alias``."""
+    return [F.col(f"{alias}.{c}") for c in df.columns if c not in _KEYS]
+
+
+def _two_paths(
+    first: DataFrame,
+    second: DataFrame,
+    ends: Callable[[Column, Column], Column] | None = operator.ne,
+) -> DataFrame:
+    """Directed 2-paths x→y→z: ``first ⋈ second ON first.dst =
+    second.src`` with the theta-conjunct ``ends(x, z)`` inside the join
+    (``None`` keeps X→Y→X round-trips).  Output (x, y, z) followed by
+    the non-key columns of ``first`` and then of ``second``."""
+    p1, p2 = first.alias("p1"), second.alias("p2")
+    cond = F.col("p1.dst") == F.col("p2.src")
+    if ends is not None:
+        cond = cond & ends(F.col("p1.src"), F.col("p2.dst"))
+    return p1.join(p2, cond).select(
+        F.col("p1.src").alias("x"),
+        F.col("p1.dst").alias("y"),
+        F.col("p2.dst").alias("z"),
+        *_carried(first, "p1"),
+        *_carried(second, "p2"),
+    )
+
+
+def _closed(paths: DataFrame, closing: DataFrame, how: str = "inner") -> DataFrame:
+    """Close each path x→y→z of :func:`_two_paths` by an edge z→x of
+    ``closing``.  ``left_semi`` keeps a path once if any closing edge
+    exists (the reference's ``hasEdge`` flag); ``inner`` emits one row
+    per closing edge and adds ``closing``'s non-key columns."""
+    w, p3 = paths.alias("w"), closing.alias("p3")
+    cond = (F.col("w.z") == F.col("p3.src")) & (F.col("w.x") == F.col("p3.dst"))
+    if how == "left_semi":
+        return w.join(p3, cond, how)
+    return w.join(p3, cond).select("w.*", *_carried(closing, "p3"))
+
+
 def two_hop_paths(
     edges: DataFrame,
     max_limit: int | None = MAX_JOIN_JOBS,
@@ -105,8 +171,8 @@ def two_hop_paths(
     The reference hand-rolls this as a tagged cogroup: edges shuffled
     twice keyed by each endpoint with IN/OUT tags, reducer nested-loop
     cross product (``approx/Approx2HopCount.java:68-76, 94-120``).  In
-    Spark it is one self equi-join; Catalyst picks sort-merge or
-    broadcast-hash, AQE splits skewed center-node keys.
+    Spark it is one self equi-join (:func:`_two_paths`); Catalyst picks
+    sort-merge or broadcast-hash, AQE splits skewed center-node keys.
 
     ``exclude_roundtrips`` adds the RS variant's theta-conjunct
     ``x != z`` (F3; ``rsjoin/RSJoinTriangleCount.java:102``) evaluated
@@ -119,13 +185,8 @@ def two_hop_paths(
     # left as-is — it collapses into one BroadcastExchange anyway, and
     # under the sort-merge strategy it gets key-partitioned by its own
     # exchange.
-    a, b = fan_out(e).alias("a"), e.alias("b")
-    cond = F.col("a.dst") == F.col("b.src")
-    if exclude_roundtrips:
-        cond = cond & (F.col("a.src") != F.col("b.dst"))
-    return a.join(b, cond).select(
-        F.col("a.src").alias("x"), F.col("a.dst").alias("y"), F.col("b.dst").alias("z")
-    )
+    paths = _two_paths(fan_out(e), e, operator.ne if exclude_roundtrips else None)
+    return paths.select("x", "y", "z")
 
 
 def two_hop_count_approx(edges: DataFrame, max_limit: int = MAX_JOIN_JOBS) -> DataFrame:
@@ -198,7 +259,7 @@ def triangle_count_raw(
     # broadcast strategy join-first needs no path shuffle at all (the
     # semi-join filter and the partial count are both map-side).
     if min_rotation:
-        a = fan_out(e.where(F.col("src") < F.col("dst"))).alias("a")
+        first = fan_out(e.where(F.col("src") < F.col("dst")))
         # the explicit broadcast pins BuildRight: with the ascending
         # filter the probe side is now the SMALLER side, and AQE would
         # otherwise flip the build to it — turning the full edge set
@@ -212,15 +273,11 @@ def triangle_count_raw(
         # failure at 100 TB.  The unbounded fallback keeps BuildRight
         # via a shuffle_hash hint (hash relation built per partition,
         # no replication), preserving the fan-out probe.
-        b = (F.broadcast(e) if max_limit is not None else e.hint("shuffle_hash")).alias("b")
-        paths = a.join(
-            b,
-            (F.col("a.dst") == F.col("b.src")) & (F.col("a.src") < F.col("b.dst")),
-        ).select(
-            F.col("a.src").alias("x"), F.col("a.dst").alias("y"), F.col("b.dst").alias("z")
-        )
+        second = F.broadcast(e) if max_limit is not None else e.hint("shuffle_hash")
+        paths = _two_paths(first, second, operator.lt)
     else:
-        paths = two_hop_paths(edges, max_limit, exclude_roundtrips=True)
+        # the RS job-1 paths of two_hop_paths(exclude_roundtrips=True)
+        paths = _two_paths(fan_out(e), e)
     if strategy == "broadcast":
         right = F.broadcast(e)
     elif strategy == "shuffle":
@@ -229,9 +286,7 @@ def triangle_count_raw(
         right = e
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
-    closed = paths.join(
-        right, (paths["z"] == right["src"]) & (paths["x"] == right["dst"]), "left_semi"
-    )
+    closed = _closed(paths, right, "left_semi")
     cnt = F.count("*") * 3 if min_rotation else F.count("*")
     return closed.agg(cnt.cast("long").alias("triangle_count_raw"))
 
@@ -320,6 +375,13 @@ def undirected_pairs(edges: DataFrame) -> DataFrame:
         .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .distinct()
     )
+
+
+def directed_pairs(edges: DataFrame) -> DataFrame:
+    """Canonical directed simple-graph view: distinct (src, dst),
+    self-loops dropped — the directed twin of :func:`undirected_pairs`,
+    ONE definition for every operator that needs a simple digraph."""
+    return edges.where(F.col("src") != F.col("dst")).select("src", "dst").distinct()
 
 
 def neighbor_view(edges: DataFrame) -> DataFrame:
@@ -664,6 +726,21 @@ FROM wedges w
 WHERE EXISTS (SELECT 1 FROM oriented o WHERE o.u = w.u2 AND o.v = w.v2x)"""
 
 
+def _edge_split(mod: int) -> Column:
+    """True for the 1/``mod`` of edges with h64("src,dst") % mod = 0 —
+    the deterministic content-hash edge split (never ``rand()``: reruns,
+    retries and the oracle see the same split) behind the DOULION
+    samplers and the IVM delta/purge sets."""
+    h = h64_sql("concat(cast(src as string), ',', cast(dst as string))", "spark")
+    return F.expr(f"({h}) % {mod} = 0")
+
+
+def _edge_split_sql(mod: int) -> str:
+    """DuckDB twin of :func:`_edge_split`."""
+    h = h64_sql("concat(CAST(src AS VARCHAR), ',', CAST(dst AS VARCHAR))", "duckdb")
+    return f"({h}) % {mod} = 0"
+
+
 def triangle_count_sampled(
     edges: DataFrame, max_limit: int | None = None, p: int = 4
 ) -> DataFrame:
@@ -678,11 +755,7 @@ def triangle_count_sampled(
     ``approx/Approx2HopCount.java:41``): DOULION keeps the whole graph
     topology in expectation instead of truncating it.  Emits the
     sampled raw count and the p³-scaled estimate."""
-    from twitter_followers_patterns_mapreduce_spark.functions.hashing import h64_sql
-
-    e = filter_max(edges, max_limit)
-    h = h64_sql("concat(cast(src as string), ',', cast(dst as string))", "spark")
-    sampled = e.where(F.expr(f"({h}) % {p} = 0"))
+    sampled = filter_max(edges, max_limit).where(_edge_split(p))
     raw = triangle_count_raw(sampled, max_limit=None, strategy="auto")
     return raw.select(
         F.col("triangle_count_raw").alias("sampled_raw"),
@@ -691,11 +764,8 @@ def triangle_count_sampled(
 
 
 def triangle_count_sampled_oracle(edges_cte: str, p: int = 4) -> str:
-    from twitter_followers_patterns_mapreduce_spark.functions.hashing import h64_sql
-
-    h = h64_sql("concat(CAST(src AS VARCHAR), ',', CAST(dst AS VARCHAR))", "duckdb")
     return f"""WITH s AS ({edges_cte}),
-sampled AS (SELECT * FROM s WHERE ({h}) % {p} = 0),
+sampled AS (SELECT * FROM s WHERE {_edge_split_sql(p)}),
 paths AS (
   SELECT e1.src AS x, e1.dst AS z, e2.dst AS y
   FROM sampled e1 JOIN sampled e2 ON e1.dst = e2.src
@@ -1065,30 +1135,17 @@ def triangle_census_directed(
 
     Output (2 rows): motif ∈ {cyclic, transitive}, n BIGINT.
     """
-    e = (
-        filter_max(edges, max_limit)
-        .where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    p = (
-        e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .join(e.select(F.col("src").alias("b"), F.col("dst").alias("c")), "b")
-        .where(F.col("a") != F.col("c"))
-        .localCheckpoint(eager=False)
-    )
+    e = directed_pairs(filter_max(edges, max_limit)).localCheckpoint(eager=False)
+    p = _two_paths(e, e).localCheckpoint(eager=False)
     cyc = (
-        p.join(
-            e.select(F.col("src").alias("c"), F.col("dst").alias("a")), ["c", "a"]
-        )
+        _closed(p, e)
         .agg(F.count("*").alias("n3"))
         .selectExpr("'cyclic' AS motif", "CAST(n3 div 3 AS BIGINT) AS n")
     )
+    # the transitive edge x→z closes the path as z→x of the reversed edges
+    rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     trans = (
-        p.join(
-            e.select(F.col("src").alias("a"), F.col("dst").alias("c")), ["a", "c"]
-        )
+        _closed(p, rev)
         .agg(F.count("*").alias("n1"))
         .selectExpr("'transitive' AS motif", "CAST(n1 AS BIGINT) AS n")
     )
@@ -1114,17 +1171,11 @@ SELECT 'transitive',
 def closure_count(s1: DataFrame, s2: DataFrame, s3: DataFrame) -> DataFrame:
     """1-row ``n``: raw directed closures a→b→c→a with a≠c, position 1/2/3
     drawn from ``s1``/``s2``/``s3`` — the reference's RS closure probe
-    (``rs/ReduceSideJoin.java``) parameterized over its input relations —
-    the exact full recounts the IVM operators and the streamed view gate
-    against (the delta terms come from :func:`delta_closures`)."""
-    p = (
-        s1.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .join(s2.select(F.col("src").alias("b"), F.col("dst").alias("c")), "b")
-        .where(F.col("a") != F.col("c"))
-    )
-    return p.join(
-        s3.select(F.col("src").alias("c"), F.col("dst").alias("a")), ["c", "a"]
-    ).agg(F.count("*").cast("long").alias("n"))
+    (``rsjoin/RSJoinTriangleCount.java``) parameterized over its input
+    relations — the exact full recounts the IVM operators and the
+    streamed view gate against (the delta terms come from
+    :func:`delta_closures`)."""
+    return _closed(_two_paths(s1, s2), s3).agg(F.count("*").cast("long").alias("n"))
 
 
 def delta_closures(d: DataFrame, u: DataFrame) -> DataFrame:
@@ -1141,20 +1192,8 @@ def delta_closures(d: DataFrame, u: DataFrame) -> DataFrame:
     delta 3·|DUU| − 3·|DDU| + |DDD|.  Two joins and no aggregate where
     three :func:`closure_count` plans cost six joins and three
     aggregates; every row still starts from a delta edge."""
-    p = (
-        d.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .join(
-            u.select(
-                F.col("src").alias("b"), F.col("dst").alias("c"), F.col("in_d").alias("f2")
-            ),
-            "b",
-        )
-        .where(F.col("a") != F.col("c"))
-    )
-    return p.join(
-        u.select(F.col("src").alias("c"), F.col("dst").alias("a"), F.col("in_d").alias("f3")),
-        ["c", "a"],
-    ).selectExpr(
+    paths = _two_paths(d, u.withColumnRenamed("in_d", "f2"))
+    return _closed(paths, u.withColumnRenamed("in_d", "f3")).selectExpr(
         "f2", "f3", "CAST(3 - 3 * CAST(f2 AS INT) + CAST(f2 AND f3 AS INT) AS BIGINT) AS w"
     )
 
@@ -1165,6 +1204,70 @@ def delta_closure_sum(d: DataFrame, u: DataFrame) -> DataFrame:
     return delta_closures(d, u).agg(
         F.expr("CAST(coalesce(SUM(w), 0) AS BIGINT)").alias("n")
     )
+
+
+#: Output column maps of the IVM pair over :func:`_ivm_counts`' row —
+#: inserts add the split-off delta to the rest, deletes purge it from
+#: the full set; the engine and its oracle select the same map.
+_IVM_INSERTS = (
+    "n_rest AS t_base_raw",
+    "n_delta AS t_added_raw",
+    "n_full AS t_total_raw",
+    "n_rest + n_delta = n_full AS consistent",
+)
+_IVM_DELETES = (
+    "n_full AS t_before_raw",
+    "n_delta AS t_lost_raw",
+    "n_rest AS t_after_raw",
+    "n_full - n_delta = n_rest AS consistent",
+)
+
+
+def _ivm_counts(edges: DataFrame, max_limit: int | None, mod: int) -> DataFrame:
+    """1 row (n_rest, n_delta, n_full) over U = the simple edge set,
+    split by :func:`_edge_split` into D and the rest: the full
+    recounts of the rest and of U, and the delta term
+    3·|DUU| − 3·|DDU| + |DDD| from ONE tagged pass
+    (:func:`delta_closure_sum`), U's rows carrying the split as
+    ``in_d`` inside the one lazy checkpoint."""
+    u = (
+        directed_pairs(filter_max(edges, max_limit))
+        .withColumn("in_d", _edge_split(mod))
+        .localCheckpoint(eager=False)
+    )
+    d = u.where("in_d")
+    rest = u.where("NOT in_d")
+    # n - n: data-derived zero keys — a foldable literal would collapse
+    # the equi-joins below into nested-loop crosses (the bm25 glob trick)
+    n_rest = closure_count(rest, rest, rest).selectExpr("n AS n_rest", "n - n AS _k")
+    n_delta = delta_closure_sum(d, u).selectExpr("n AS n_delta", "n - n AS _k")
+    n_full = closure_count(u, u, u).selectExpr("n AS n_full", "n - n AS _k")
+    return n_rest.join(F.broadcast(n_delta), "_k").join(F.broadcast(n_full), "_k")
+
+
+def _ivm_counts_oracle(edges_cte: str, mod: int, cols: tuple[str, ...]) -> str:
+    """DuckDB twin of :func:`_ivm_counts` with every closure term
+    counted separately, then ``cols`` selected from it."""
+    closure = (
+        "SELECT CAST(COUNT(*) AS BIGINT) AS n "
+        "FROM {s1} e1 JOIN {s2} e2 ON e1.dst = e2.src AND e1.src <> e2.dst "
+        "JOIN {s3} e3 ON e3.src = e2.dst AND e3.dst = e1.src"
+    )
+    return f"""WITH s AS ({edges_cte}),
+u AS (SELECT DISTINCT src, dst FROM s WHERE src <> dst),
+d AS (SELECT * FROM u WHERE {_edge_split_sql(mod)}),
+rest AS (SELECT * FROM u WHERE NOT ({_edge_split_sql(mod)})),
+r AS ({closure.format(s1='rest', s2='rest', s3='rest')}),
+a_duu AS ({closure.format(s1='d', s2='u', s3='u')}),
+b_ddu AS ({closure.format(s1='d', s2='d', s3='u')}),
+c_ddd AS ({closure.format(s1='d', s2='d', s3='d')}),
+f AS ({closure.format(s1='u', s2='u', s3='u')}),
+counts AS (
+  SELECT r.n AS n_rest,
+         CAST(3 * a_duu.n - 3 * b_ddu.n + c_ddd.n AS BIGINT) AS n_delta,
+         f.n AS n_full
+  FROM r, a_duu, b_ddu, c_ddd, f)
+SELECT {", ".join(cols)} FROM counts"""
 
 
 def triangle_count_ivm(
@@ -1197,56 +1300,11 @@ def triangle_count_ivm(
 
     Output (1 row): t_base_raw, t_added_raw, t_total_raw, consistent.
     """
-    h = h64_sql("concat(cast(src as string), ',', cast(dst as string))", "spark")
-    u = (
-        filter_max(edges, max_limit)
-        .where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .withColumn("in_d", F.expr(f"({h}) % {delta_mod} = 0"))
-        .localCheckpoint(eager=False)
-    )
-    d = u.where("in_d")
-    e = u.where("NOT in_d")
-
-    # n - n: data-derived zero keys — a foldable literal would collapse
-    # the equi-joins below into nested-loop crosses (the bm25 glob trick)
-    base = closure_count(e, e, e).selectExpr("n AS t_base_raw", "n - n AS _k")
-    added = delta_closure_sum(d, u).selectExpr("n AS t_added_raw", "n - n AS _k")
-    total = closure_count(u, u, u).selectExpr("n AS t_total_raw", "n - n AS _k")
-    return (
-        base.join(F.broadcast(added), "_k")
-        .join(F.broadcast(total), "_k")
-        .selectExpr(
-            "t_base_raw",
-            "t_added_raw",
-            "t_total_raw",
-            "t_base_raw + t_added_raw = t_total_raw AS consistent",
-        )
-    )
+    return _ivm_counts(edges, max_limit, delta_mod).selectExpr(*_IVM_INSERTS)
 
 
 def triangle_count_ivm_oracle(edges_cte: str, delta_mod: int = 4) -> str:
-    h = h64_sql("concat(CAST(src AS VARCHAR), ',', CAST(dst AS VARCHAR))", "duckdb")
-    closure = (
-        "SELECT CAST(COUNT(*) AS BIGINT) AS n "
-        "FROM {s1} e1 JOIN {s2} e2 ON e1.dst = e2.src AND e1.src <> e2.dst "
-        "JOIN {s3} e3 ON e3.src = e2.dst AND e3.dst = e1.src"
-    )
-    return f"""WITH s AS ({edges_cte}),
-u AS (SELECT DISTINCT src, dst FROM s WHERE src <> dst),
-d AS (SELECT * FROM u WHERE ({h}) % {delta_mod} = 0),
-e AS (SELECT * FROM u WHERE ({h}) % {delta_mod} <> 0),
-base AS ({closure.format(s1='e', s2='e', s3='e')}),
-a_duu AS ({closure.format(s1='d', s2='u', s3='u')}),
-b_ddu AS ({closure.format(s1='d', s2='d', s3='u')}),
-c_ddd AS ({closure.format(s1='d', s2='d', s3='d')}),
-total AS ({closure.format(s1='u', s2='u', s3='u')})
-SELECT base.n AS t_base_raw,
-       CAST(3 * a_duu.n - 3 * b_ddu.n + c_ddd.n AS BIGINT) AS t_added_raw,
-       total.n AS t_total_raw,
-       (base.n + 3 * a_duu.n - 3 * b_ddu.n + c_ddd.n) = total.n AS consistent
-FROM base, a_duu, b_ddu, c_ddd, total"""
+    return _ivm_counts_oracle(edges_cte, delta_mod, _IVM_INSERTS)
 
 
 def triangle_census_sampled(
@@ -1267,8 +1325,7 @@ def triangle_census_sampled(
 
     Output (2 rows): motif ∈ {cyclic, transitive}, sampled_n, and the
     p³-scaled estimated_n."""
-    h = h64_sql("concat(cast(src as string), ',', cast(dst as string))", "spark")
-    sampled = filter_max(edges, max_limit).where(F.expr(f"({h}) % {p} = 0"))
+    sampled = filter_max(edges, max_limit).where(_edge_split(p))
     census = triangle_census_directed(sampled, max_limit=None)
     return census.select(
         "motif",
@@ -1278,9 +1335,8 @@ def triangle_census_sampled(
 
 
 def triangle_census_sampled_oracle(edges_cte: str, p: int = 4) -> str:
-    h = h64_sql("concat(CAST(src AS VARCHAR), ',', CAST(dst AS VARCHAR))", "duckdb")
     return f"""WITH s AS ({edges_cte}),
-samp AS (SELECT * FROM s WHERE ({h}) % {p} = 0),
+samp AS (SELECT * FROM s WHERE {_edge_split_sql(p)}),
 e AS (SELECT DISTINCT src, dst FROM samp WHERE src <> dst),
 p2 AS (
   SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
@@ -1332,12 +1388,7 @@ def negative_samples(
 
     Output: (u, v, slot, neg_rank) with neg_rank 1..≤k.
     """
-    e = (
-        filter_max(edges, max_limit)
-        .where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    e = directed_pairs(filter_max(edges, max_limit))
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst")))
@@ -1446,53 +1497,8 @@ def triangle_count_ivm_deletes(
     production omits it.  Output (1 row): t_before_raw, t_lost_raw,
     t_after_raw, consistent.
     """
-    h = h64_sql("concat(cast(src as string), ',', cast(dst as string))", "spark")
-    u = (
-        filter_max(edges, max_limit)
-        .where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .withColumn("in_d", F.expr(f"({h}) % {delete_mod} = 0"))
-        .localCheckpoint(eager=False)
-    )
-    d = u.where("in_d")
-    kept = u.where("NOT in_d")
-
-    before = closure_count(u, u, u).selectExpr("n AS t_before_raw", "n - n AS _k")
-    lost = delta_closure_sum(d, u).selectExpr("n AS t_lost_raw", "n - n AS _k")
-    after = closure_count(kept, kept, kept).selectExpr(
-        "n AS t_after_raw", "n - n AS _k"
-    )
-    return (
-        before.join(F.broadcast(lost), "_k")
-        .join(F.broadcast(after), "_k")
-        .selectExpr(
-            "t_before_raw",
-            "t_lost_raw",
-            "t_after_raw",
-            "t_before_raw - t_lost_raw = t_after_raw AS consistent",
-        )
-    )
+    return _ivm_counts(edges, max_limit, delete_mod).selectExpr(*_IVM_DELETES)
 
 
 def triangle_count_ivm_deletes_oracle(edges_cte: str, delete_mod: int = 4) -> str:
-    h = h64_sql("concat(CAST(src AS VARCHAR), ',', CAST(dst AS VARCHAR))", "duckdb")
-    closure = (
-        "SELECT CAST(COUNT(*) AS BIGINT) AS n "
-        "FROM {s1} e1 JOIN {s2} e2 ON e1.dst = e2.src AND e1.src <> e2.dst "
-        "JOIN {s3} e3 ON e3.src = e2.dst AND e3.dst = e1.src"
-    )
-    return f"""WITH s AS ({edges_cte}),
-u AS (SELECT DISTINCT src, dst FROM s WHERE src <> dst),
-d AS (SELECT * FROM u WHERE ({h}) % {delete_mod} = 0),
-kept AS (SELECT * FROM u WHERE ({h}) % {delete_mod} <> 0),
-before AS ({closure.format(s1='u', s2='u', s3='u')}),
-a_duu AS ({closure.format(s1='d', s2='u', s3='u')}),
-b_ddu AS ({closure.format(s1='d', s2='d', s3='u')}),
-c_ddd AS ({closure.format(s1='d', s2='d', s3='d')}),
-after AS ({closure.format(s1='kept', s2='kept', s3='kept')})
-SELECT before.n AS t_before_raw,
-       CAST(3 * a_duu.n - 3 * b_ddu.n + c_ddd.n AS BIGINT) AS t_lost_raw,
-       after.n AS t_after_raw,
-       (before.n - (3 * a_duu.n - 3 * b_ddu.n + c_ddd.n)) = after.n AS consistent
-FROM before, a_duu, b_ddu, c_ddd, after"""
+    return _ivm_counts_oracle(edges_cte, delete_mod, _IVM_DELETES)

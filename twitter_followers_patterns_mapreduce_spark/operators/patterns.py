@@ -33,11 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _dedup_edges(edges: DataFrame) -> DataFrame:
-    return (
-        edges.where(F.col("src") != F.col("dst")).select("src", "dst").distinct()
-    )
+from twitter_followers_patterns_mapreduce_spark.operators.graph import directed_pairs
 
 
 def match_pattern(
@@ -53,7 +49,7 @@ def match_pattern(
     columns (e.g. canonicalizers like ``"a < b"``)."""
     if not atoms:
         raise ValueError("match_pattern: empty pattern")
-    e = _dedup_edges(edges).localCheckpoint(eager=False)
+    e = directed_pairs(edges).localCheckpoint(eager=False)
 
     remaining = list(atoms)
     bound: list[str] = []
@@ -114,7 +110,7 @@ def square_count(edges: DataFrame) -> DataFrame:
     the 2-path relation, never a 3-path (at the engine's test graph
     that is 365k vs 20M rows; same asymptotics argument at 100 TB).
     """
-    e = _dedup_edges(edges).localCheckpoint(eager=False)
+    e = directed_pairs(edges).localCheckpoint(eager=False)
     half1 = (
         e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .join(e.select(F.col("src").alias("b"), F.col("dst").alias("c")), "b")

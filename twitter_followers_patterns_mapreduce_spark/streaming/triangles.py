@@ -1,7 +1,7 @@
 """Streamed incremental triangle maintenance (nineteenth gated
 streaming class) — the reference's headline statistic (the RS/RJ raw
-closure count, ``rs/ReduceSideJoin.java``) kept continuously fresh as
-edge arrivals drain through a micro-batch stream.
+closure count, ``rsjoin/RSJoinTriangleCount.java``) kept continuously
+fresh as edge arrivals drain through a micro-batch stream.
 
 Pattern: ``foreachBatch`` + graph IVM.  ``operators/graph.py::
 triangle_count_ivm`` proves the delta algebra for ONE base+delta step
@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from twitter_followers_patterns_mapreduce_spark.operators.graph import (
     closure_count,
     delta_closures,
+    directed_pairs,
 )
 from twitter_followers_patterns_mapreduce_spark.streaming.state import (
     Tables,
@@ -95,11 +96,7 @@ def triangles_apply_stream(
     threads).  Blocks until drained."""
 
     def _merge(batch_df: DataFrame, prev: dict[str, DataFrame] | None) -> dict[str, DataFrame]:
-        b = (
-            batch_df.where(F.col("src") != F.col("dst"))
-            .select("src", "dst")
-            .distinct()
-        )
+        b = directed_pairs(batch_df)
         if prev is None:
             old_edges = _empty_edges(spark)
             old_count = spark.range(1).selectExpr("CAST(0 AS BIGINT) AS t_raw")
