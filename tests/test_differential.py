@@ -91,6 +91,26 @@ def test_rs_equals_rj_equals_python(spark, edges):
     assert one(G.triangle_count_raw(e, 10**9, strategy="auto")) == want
 
 
+def test_min_rotation_equals_full_count_with_negative_ids(spark):
+    """min_rotation counts paths from each cycle's minimum vertex and
+    closes them only with edges z→x where src > dst; on a distinct,
+    loop-free graph over negative and positive ids that equals the full
+    RS count (``min_rotation=False``, the Python oracle here) under both
+    physical closing joins."""
+    rnd = random.Random(2024)
+    edges = set()
+    while len(edges) < 160:
+        a, b = rnd.randrange(-12, 13), rnd.randrange(-12, 13)
+        if a != b:
+            edges.add((a, b))
+    edges = sorted(edges)
+    e = make_edges(spark, edges)
+    want = py_triangle_raw(edges)
+    assert want > 0
+    for strategy in ("shuffle", "broadcast"):
+        assert one(G.triangle_count_raw(e, 10**9, strategy, min_rotation=True)) == want, strategy
+
+
 @pytest.mark.parametrize("seed", [7, 42])
 def test_raw_is_three_times_triangles(spark, seed):
     edges = random_edges(seed)

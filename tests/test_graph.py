@@ -602,15 +602,27 @@ def test_delta_closures_empty_delta(spark):
 
 
 def _py4j_commands(spark, build) -> int:
-    """Py4J commands sent while ``build()`` runs (plan building only)."""
+    """Py4J commands sent while ``build()`` runs (plan building only).
+
+    Earlier frames are garbage-collected first, and memory-release
+    commands (``m``/``d``) are not counted: Python's collector sends one
+    per freed JVM reference whenever it happens to run, which is not the
+    build's own work."""
+    import gc
+
+    from py4j import protocol
+
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     sent = []
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
 
     def counting(command, *args, **kwargs):
-        sent.append(command)
+        if not command.startswith(release):
+            sent.append(command)
         return send(command, *args, **kwargs)
 
+    gc.collect()
     client.send_command = counting
     try:
         build()
@@ -621,8 +633,8 @@ def _py4j_commands(spark, build) -> int:
 
 def test_triangle_plan_build_py4j_commands_bounded(spark, sample_edges):
     """Building (not running) the auto min-rotation triangle plan stays
-    well under the 428 Py4J commands it sends with PySpark's DataFrame
-    debugging hook on (118 with it off, as ``get_spark`` sets it)."""
+    well under the 428 Py4J commands it sent with PySpark's DataFrame
+    debugging hook on (140 with it off, as ``get_spark`` sets it)."""
 
     def build():
         G.triangle_count(sample_edges, strategy="auto", min_rotation=True)

@@ -340,6 +340,70 @@ def test_staged_edges_file_added_to_directory_restages(spark, tmp_path):
     assert got == _duck_edges(f"{d}/*.csv") == [(1, 2), (2, 3), (3, 1)]
 
 
+def _duck_wedge_answers(path: str) -> dict[str, int]:
+    """The benchmarked wedge jobs' answers on the input as DuckDB reads
+    it (distinct, loop-free edges under the default MAX)."""
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        con.sql(
+            f"CREATE TABLE e AS SELECT * FROM read_csv('{path}', header=false,"
+            " columns={'src': 'BIGINT', 'dst': 'BIGINT'})"
+        )
+        (two_hop,) = con.sql("SELECT count(*) FROM e a JOIN e b ON a.dst = b.src").fetchone()
+        (raw,) = con.sql(
+            "SELECT count(*) FROM e a JOIN e b ON a.dst = b.src AND a.src <> b.dst"
+            " WHERE EXISTS (SELECT 1 FROM e c WHERE c.src = b.dst AND c.dst = a.src)"
+        ).fetchone()
+    finally:
+        con.close()
+    return {"two_hop_approx": two_hop, "triangle_rs": raw, "triangle_rj": raw, "triangle_auto": raw // 3}
+
+
+#: the benchmarked wedge jobs, as ``perfbench`` calls them
+_WEDGE_JOBS = {
+    "two_hop_approx": G.two_hop_count_approx,
+    "triangle_rs": lambda e: G.triangle_count_raw(e, strategy="shuffle"),
+    "triangle_rj": lambda e: G.triangle_count_raw(e, strategy="broadcast"),
+    "triangle_auto": lambda e: G.triangle_count(e, strategy="auto", min_rotation=True),
+}
+
+
+def test_staged_edges_repeated_rewrites_restages(spark, tmp_path):
+    """Each re-stage releases the previous input's partitioned in-memory
+    copies, so three rewrites leave the persisted-RDD count where the
+    first staging put it.  The copies only speed the wedge jobs up: with
+    the cache cleared, every job still gives DuckDB's answer."""
+    import random
+
+    from pyspark import StorageLevel
+
+    from twitter_followers_patterns_mapreduce_spark.sources.readers import partitioned_on
+
+    p = tmp_path / "edges.csv"
+    rnd = random.Random(17)
+    frames, persisted = [], []
+    for n in (150, 180, 210, 240):  # the first write, then 3 rewrites
+        pairs = set()
+        while len(pairs) < n:
+            a, b = rnd.randrange(40), rnd.randrange(40)
+            if a != b:
+                pairs.add((a, b))
+        p.write_text("".join(f"{a},{b}\n" for a, b in sorted(pairs)))
+        edges = edges_from_csv(spark, str(p))
+        want = _duck_wedge_answers(str(p))
+        assert one(G.two_hop_count_approx(edges)) == want["two_hop_approx"]
+        frames.append(edges)
+        persisted.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+    assert persisted == persisted[:1] * 4
+    for old in frames[:-1]:
+        assert [partitioned_on(old, k).storageLevel for k in ("src", "dst")] == [StorageLevel.NONE] * 2
+    assert partitioned_on(frames[-1], "dst").storageLevel != StorageLevel.NONE
+    spark.catalog.clearCache()
+    assert {job: one(run(frames[-1])) for job, run in _WEDGE_JOBS.items()} == want
+
+
 def test_staged_edges_repeat_call_reuses_frame_and_writes_nothing(spark, tmp_path):
     path = _write_sample(tmp_path)
     first = edges_from_csv(spark, path)

@@ -346,22 +346,22 @@ def test_rs_rj_join_strategies(spark):
 #: (Exchange nodes, [(join, join type, build side)] top-down) of the
 #: initial executed plans of the benchmarked wedge jobs over a parquet
 #: edge file, with size-based broadcasts off so that every broadcast is
-#: one the code asks for: the fan-out RoundRobin exchange under the
-#: 2-path probe, the min-rotation BuildRight broadcast pin, and the
-#: RS/RJ hints on the closing semi-join.
+#: one the code asks for: the two hash exchanges that partition the
+#: edges on each join key (``partitioned_on``) under the co-partitioned
+#: shuffled-hash 2-path join, and the RS/RJ hints on the closing
+#: semi-join.
 _SEMI_SHUFFLE = ("ShuffledHashJoin", "LeftSemi", "BuildRight")
 _SEMI_BROADCAST = ("BroadcastHashJoin", "LeftSemi", "BuildRight")
 _SEMI_AUTO = ("SortMergeJoin", "LeftSemi", "")
-_WEDGE = ("SortMergeJoin", "Inner", "")
-_WEDGE_PINNED = ("BroadcastHashJoin", "Inner", "BuildRight")
+_WEDGE = ("ShuffledHashJoin", "Inner", "BuildRight")
 WEDGE_PLAN_SHAPES = {
-    ("two_hop_count_approx", None, None): (4, [_WEDGE]),
-    ("triangle_count_raw", "shuffle", False): (6, [_SEMI_SHUFFLE, _WEDGE]),
-    ("triangle_count_raw", "shuffle", True): (5, [_SEMI_SHUFFLE, _WEDGE_PINNED]),
-    ("triangle_count_raw", "broadcast", False): (5, [_SEMI_BROADCAST, _WEDGE]),
-    ("triangle_count_raw", "broadcast", True): (4, [_SEMI_BROADCAST, _WEDGE_PINNED]),
-    ("triangle_count_raw", "auto", False): (6, [_SEMI_AUTO, _WEDGE]),
-    ("triangle_count_raw", "auto", True): (5, [_SEMI_AUTO, _WEDGE_PINNED]),
+    ("two_hop_count_approx", None, None): (3, [_WEDGE]),
+    ("triangle_count_raw", "shuffle", False): (5, [_SEMI_SHUFFLE, _WEDGE]),
+    ("triangle_count_raw", "shuffle", True): (5, [_SEMI_SHUFFLE, _WEDGE]),
+    ("triangle_count_raw", "broadcast", False): (4, [_SEMI_BROADCAST, _WEDGE]),
+    ("triangle_count_raw", "broadcast", True): (4, [_SEMI_BROADCAST, _WEDGE]),
+    ("triangle_count_raw", "auto", False): (5, [_SEMI_AUTO, _WEDGE]),
+    ("triangle_count_raw", "auto", True): (5, [_SEMI_AUTO, _WEDGE]),
 }
 
 
@@ -399,6 +399,61 @@ def test_wedge_job_plan_shapes(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert got == WEDGE_PLAN_SHAPES
+
+
+def _physical_nodes(node):
+    """``node`` and every node below it, through adaptive plans and
+    query stages (an in-memory scan's cached plan is not a child)."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        yield from _physical_nodes(node.executedPlan())
+        return
+    if cls.endswith("QueryStageExec"):
+        yield from _physical_nodes(node.plan())
+        return
+    yield node
+    kids = node.children().iterator()
+    while kids.hasNext():
+        yield from _physical_nodes(kids.next())
+
+
+def _join(nodes, join_type: str):
+    (join,) = [n for n in nodes if n.getClass().getSimpleName().endswith("JoinExec")
+               and n.joinType().toString() == join_type]
+    return join
+
+
+def test_wedge_jobs_on_staged_edges_read_cached_copies(spark, tmp_path):
+    """Plan-only, under the session's own join settings: on the frame
+    ``edges_from_csv`` stages, every benchmarked job's 2-path join reads
+    the in-memory copy partitioned on its key on both sides, with no
+    exchange or broadcast beneath it; RS shuffles its paths once."""
+    import random
+
+    from twitter_followers_patterns_mapreduce_spark.operators import graph as G
+    from twitter_followers_patterns_mapreduce_spark.sources.readers import edges_from_csv
+
+    rnd = random.Random(5)
+    csv = tmp_path / "edges.csv"
+    csv.write_text("".join(f"{rnd.randrange(300)},{rnd.randrange(300)}\n" for _ in range(2000)))
+    edges = edges_from_csv(spark, str(csv))
+    jobs = {
+        "two_hop_approx": G.two_hop_count_approx(edges),
+        "triangle_rs": G.triangle_count_raw(edges, strategy="shuffle"),
+        "triangle_rj": G.triangle_count_raw(edges, strategy="broadcast"),
+        "triangle_auto": G.triangle_count(edges, strategy="auto", min_rotation=True),
+    }
+    for job, df in jobs.items():
+        nodes = list(_physical_nodes(df._jdf.queryExecution().executedPlan()))
+        wedge = _join(nodes, "Inner")
+        assert wedge.getClass().getSimpleName() == "ShuffledHashJoinExec", job
+        for side in (wedge.left(), wedge.right()):
+            below = [n.getClass().getSimpleName() for n in _physical_nodes(side)]
+            assert "InMemoryTableScanExec" in below, (job, below)
+            assert not [n for n in below if n.endswith("ExchangeExec")], (job, below)
+        if job == "triangle_rs":
+            paths = [n.getClass().getSimpleName() for n in _physical_nodes(_join(nodes, "LeftSemi").left())]
+            assert paths.count("ShuffleExchangeExec") == 1, paths
 
 
 @pytest.mark.parametrize("name", ["dedup_minhash_lsh", "dedup_simhash_pairs", "embedding_top_pairs_lsh"])

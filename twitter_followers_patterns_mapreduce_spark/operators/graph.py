@@ -31,7 +31,7 @@ and INNER wherever the edge set is distinct, so the closing row can
 carry columns (``delta_closures``' ``f3``).  RS, RJ and auto are not
 kernel branches: they are the hint the caller puts on the closing
 frame (``e.hint("shuffle_hash")``, ``F.broadcast(e)``, none), just as
-fan-out, hints and filters on the path inputs are the caller's.  Both
+partitioning, hints and filters on the path inputs are the caller's.  Both
 joins are ON-conditions over aliased frames renamed after the join: a
 rename before the join puts Projects under the exchanges and makes the
 broadcast keys nullable.
@@ -40,7 +40,10 @@ Scale notes (100 TB): the exact count NEVER materializes paths — it is
 the degree-product rewrite (one shuffle over 2|E| rows, partial
 aggregation map-side).  Path materialization is O(Σ indeg·outdeg),
 quadratic in hot nodes; callers cap it with ``max_limit`` exactly as
-the reference does, and AQE skew-join handles power-law keys.
+the reference does.  The 2-path join reads both inputs already
+hash-partitioned on the center node (:func:`_wedge_sides`), so AQE has
+no join shuffle to split: a hub's wedges land in one task, bounded by
+MAX as the reference's reducer is.
 """
 
 from __future__ import annotations
@@ -53,7 +56,7 @@ from pyspark.sql import functions as F
 
 from twitter_followers_patterns_mapreduce_spark.functions.hashing import h64_sql
 from twitter_followers_patterns_mapreduce_spark.functions.prefix import spine_offsets
-from twitter_followers_patterns_mapreduce_spark.sources.readers import fan_out
+from twitter_followers_patterns_mapreduce_spark.sources.readers import fan_out, partitioned_on
 
 #: Reference compile-time constants (``countedges/CountEdgesAfterMax.java:34``,
 #: ``approx/Approx2HopCount.java:41``) — here runtime parameters.
@@ -68,10 +71,12 @@ NEG_INDEX_BUCKETS = 256
 def filter_max(edges: DataFrame, max_limit: int | None) -> DataFrame:
     """F1, the signature predicate: keep edge iff ``src < MAX AND dst < MAX``
     (``countedges/CountEdgesAfterMax.java:56``).  Catalyst pushes this
-    conjunctive range predicate into the scan (PushedFilters)."""
+    conjunctive range predicate into the scan (PushedFilters).  Given as
+    SQL text, it costs one Py4J call to build where the Column form costs
+    ten, and a wedge plan applies it up to three times."""
     if max_limit is None:
         return edges
-    return edges.where((F.col("src") < max_limit) & (F.col("dst") < max_limit))
+    return edges.where(f"src < {max_limit} AND dst < {max_limit}")
 
 
 def count_edges(edges: DataFrame, max_limit: int = MAX_EDGE_COUNT) -> DataFrame:
@@ -161,6 +166,17 @@ def _closed(paths: DataFrame, closing: DataFrame, how: str = "inner") -> DataFra
     return w.join(p3, cond).select("w.*", *_carried(closing, "p3"))
 
 
+def _wedge_sides(edges: DataFrame, max_limit: int | None) -> tuple[DataFrame, DataFrame]:
+    """The 2-path join's inputs, partitioned on their join keys
+    (:func:`partitioned_on`: in-memory copies for a staged edge table),
+    so the join needs no exchange and no broadcast: ``dst``-partitioned
+    edges probe a hash table of the ``src``-partitioned ones built per
+    partition (shuffled-hash, BuildRight), as the reference's reducer
+    buffers each center node's edges."""
+    first, second = (filter_max(partitioned_on(edges, key), max_limit) for key in ("dst", "src"))
+    return first, second.hint("shuffle_hash")
+
+
 def two_hop_paths(
     edges: DataFrame,
     max_limit: int | None = MAX_JOIN_JOBS,
@@ -171,21 +187,15 @@ def two_hop_paths(
     The reference hand-rolls this as a tagged cogroup: edges shuffled
     twice keyed by each endpoint with IN/OUT tags, reducer nested-loop
     cross product (``approx/Approx2HopCount.java:68-76, 94-120``).  In
-    Spark it is one self equi-join (:func:`_two_paths`); Catalyst picks
-    sort-merge or broadcast-hash, AQE splits skewed center-node keys.
+    Spark it is one self equi-join (:func:`_two_paths`) of the edges
+    partitioned on each endpoint (:func:`_wedge_sides`): a
+    co-partitioned shuffled-hash join, with no broadcast.
 
     ``exclude_roundtrips`` adds the RS variant's theta-conjunct
     ``x != z`` (F3; ``rsjoin/RSJoinTriangleCount.java:102``) evaluated
     inside the join, matching the reference's early filtering.
     """
-    e = filter_max(edges, max_limit)
-    # Fan out the PROBE side before the expansion: the join emits ~40×
-    # its input, so partitioning must be sized by output work, not
-    # scan bytes (see sources/readers.py::fan_out).  The build side is
-    # left as-is — it collapses into one BroadcastExchange anyway, and
-    # under the sort-merge strategy it gets key-partitioned by its own
-    # exchange.
-    paths = _two_paths(fan_out(e), e, operator.ne if exclude_roundtrips else None)
+    paths = _two_paths(*_wedge_sides(edges, max_limit), operator.ne if exclude_roundtrips else None)
     return paths.select("x", "y", "z")
 
 
@@ -239,6 +249,8 @@ def triangle_count_raw(
     materialized path set — the rows the closure semi-join must shuffle
     (rs) or probe (rj) — drops to ~1/3 (measured at sf0.1: 25.7M → 8.0M
     path rows; rs 1.82 s → 0.97 s, rj 2.23 s → 1.10 s fresh-JVM min-of-3).
+    Since x < z, a closing edge z→x has ``src > dst``: the closing side
+    keeps only those edges, half the broadcast or shuffle.
     OFF by default because the equivalence needs distinct, loop-free
     edges: with duplicate edges the three rotations of one cycle carry
     DIFFERENT multiplicity products (the semi-join existence check does
@@ -258,26 +270,13 @@ def triangle_count_raw(
     # 25.7M path rows costs more than streaming them, and under the
     # broadcast strategy join-first needs no path shuffle at all (the
     # semi-join filter and the partial count are both map-side).
+    first, second = _wedge_sides(edges, max_limit)
     if min_rotation:
-        first = fan_out(e.where(F.col("src") < F.col("dst")))
-        # the explicit broadcast pins BuildRight: with the ascending
-        # filter the probe side is now the SMALLER side, and AQE would
-        # otherwise flip the build to it — turning the full edge set
-        # into a coalesced 1-2 task probe and serializing the expansion
-        # (measured: rs 1.8 s → 3.3 s from exactly that flip).
-        # The pin is gated on a BOUNDED edge set (round-11 verdict /
-        # advice): the registered queries pass max_limit=12500, capping
-        # the broadcast at ≤ max_limit² edges; a caller opting into
-        # min_rotation with max_limit=None would otherwise broadcast an
-        # unbounded edge table — a guaranteed 8 GB-cap/driver-OOM
-        # failure at 100 TB.  The unbounded fallback keeps BuildRight
-        # via a shuffle_hash hint (hash relation built per partition,
-        # no replication), preserving the fan-out probe.
-        second = F.broadcast(e) if max_limit is not None else e.hint("shuffle_hash")
-        paths = _two_paths(first, second, operator.lt)
+        paths = _two_paths(first.where(F.col("src") < F.col("dst")), second, operator.lt)
+        e = e.where(F.col("src") > F.col("dst"))
     else:
         # the RS job-1 paths of two_hop_paths(exclude_roundtrips=True)
-        paths = _two_paths(fan_out(e), e)
+        paths = _two_paths(first, second)
     if strategy == "broadcast":
         right = F.broadcast(e)
     elif strategy == "shuffle":

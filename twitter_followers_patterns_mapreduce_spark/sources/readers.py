@@ -9,7 +9,10 @@ Reference scan surface (SURVEY.md §2.1):
     frame over that copy, for as long as the input's fingerprint (path,
     size, mtime, and for local files ctime and inode, of every file Spark
     would read) is unchanged; any change re-stages.  Catalyst pushes
-    filters into the scan and prunes columns either way.
+    filters into the scan and prunes columns either way.  The staged
+    frame also gets two in-memory copies hash-partitioned on ``src`` and
+    on ``dst`` (:func:`partitioned_on`), which the 2-path join reads
+    with no exchange.
   * S3 — line parse ``StringTokenizer``+``split(",")``+``parseInt``
     (``exact/Exact2HopCount.java:55-59``): subsumed by the CSV reader's
     typed schema; also provided over raw-line DataFrames for parity.
@@ -148,10 +151,22 @@ def edges_from_csv(spark: SparkSession, path: str) -> DataFrame:
     after the staging write, and a copy whose two fingerprints differ is
     never kept: that call returns the plain CSV read instead.
 
+    Staging also caches and fills :func:`partitioned_on` of the copy
+    for ``src`` and for ``dst`` (two Spark jobs), so every later
+    ``partitioned_on`` of the returned frame is an in-memory scan that
+    already carries its hash partitioning.  They are filled at once
+    because under AQE a cached plan reports its partitioning only after
+    it has run: an unfilled copy gets an exchange above it on the first
+    join that reads it.  Re-staging a path releases the previous copy's
+    two in-memory copies.  They only save time: after
+    ``spark.catalog.clearCache()`` the same calls plan a hash exchange
+    per side and give the same answers.
+
     The returned frame is a snapshot of the input at call time, not a
     live view: a rewrite of the file after the call is seen by the next
-    call, not by frames already returned (their copies stay until the
-    JVM exits, so they keep working).  Values are the CSV reader's,
+    call, not by frames already returned (their parquet copies stay
+    until the JVM exits, so they keep working, without the in-memory
+    copies once re-staged).  Values are the CSV reader's,
     so a malformed line's NULL fields (PERMISSIVE mode) round-trip
     through the copy unchanged.  Under any other master the copy would
     sit on the driver's disk where executors cannot read it, so the
@@ -173,6 +188,11 @@ def edges_from_csv(spark: SparkSession, path: str) -> DataFrame:
         shutil.rmtree(copy, ignore_errors=True)
         return plain
     staged = spark.read.schema(EDGE_SCHEMA).parquet("file://" + copy)
+    if hit is not None and hit[0].sparkContext is spark.sparkContext:
+        for key in EDGE_SCHEMA.names:
+            partitioned_on(hit[2], key).unpersist()
+    for key in EDGE_SCHEMA.names:
+        partitioned_on(staged, key).cache().count()
     _STAGED[path] = (spark, fp, staged)
     return staged
 
@@ -334,10 +354,10 @@ def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     frame is returned UNCHANGED.  The skip applies only to plain scans
     (:func:`_plain_scan`): below a join, aggregate or repartition the
     partitioning is the shuffle's, not the leaf files', so those frames
-    are always repartitioned.  At bench scale the local single-file
-    inputs estimate to 1 split, so the RoundRobin exchange is still
-    present in every local plan; frames with no file lineage keep the
-    old unconditional behavior.
+    are always repartitioned.  Local single-file inputs estimate to 1
+    split, so they get the RoundRobin exchange; frames with no file
+    lineage keep the old unconditional behavior.  Joins on a key use
+    :func:`partitioned_on` instead.
     """
     n = parallelism or df.sparkSession.sparkContext.defaultParallelism
     if _plain_scan(df):
@@ -345,6 +365,22 @@ def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
         if est is not None and est >= n:
             return df
     return df.repartition(n)
+
+
+def partitioned_on(df: DataFrame, key: str) -> DataFrame:
+    """``df`` hash-partitioned on column ``key`` into
+    ``defaultParallelism`` partitions: the keyed shuffle the reference
+    runs before each join (``approx/Approx2HopCount.java:68-76``).
+
+    Two frames partitioned on their join keys by this helper join with
+    no further exchange.  On the frame :func:`edges_from_csv` stages, a
+    call resolves through Spark's ``CacheManager`` to the in-memory copy
+    staged for ``key``, so the shuffle is paid once per session; on any
+    other frame it is a plain hash exchange.  Filters go on its OUTPUT,
+    or the plan no longer matches the cached copy (Catalyst still pushes
+    them below the exchange where nothing is cached).
+    """
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
 
 
 #: analyzed-plan nodes that keep a scan's partitioning (narrow, no exchange)
