@@ -12,7 +12,7 @@ SF_DIR_MED = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
-    s = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="tests", cpus=8)
     yield s
 
 

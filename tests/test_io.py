@@ -6,6 +6,7 @@ must reproduce the §2.9 goldens (CE=10, EX=16, RS raw=6).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from twitter_followers_patterns_mapreduce_spark.operators import graph as G
@@ -109,25 +110,6 @@ def test_compact_merges_small_files(spark, tmp_path):
     assert back.agg({"v": "sum"}).collect()[0][0] == 999 * 1000  # content preserved
 
 
-def test_json_and_orc_edge_sources_match_csv(spark, tmp_path):
-    from twitter_followers_patterns_mapreduce_spark.sources.readers import (
-        edges_from_csv,
-        edges_from_json,
-        edges_from_orc,
-    )
-
-    csv_path = _write_sample(tmp_path)
-    edges = edges_from_csv(spark, csv_path)
-    jp, op = str(tmp_path / "edges_json"), str(tmp_path / "edges_orc")
-    edges.write.json(jp)
-    edges.write.orc(op)
-    base = {(r["src"], r["dst"]) for r in edges.collect()}
-    assert {(r["src"], r["dst"]) for r in edges_from_json(spark, jp).collect()} == base
-    assert {(r["src"], r["dst"]) for r in edges_from_orc(spark, op).collect()} == base
-    # same goldens through a non-CSV source (§2.9: CE=10 at huge MAX)
-    assert one(G.count_edges(edges_from_json(spark, jp), 10**9)) == 10
-
-
 def test_malformed_csv_lines_become_nulls_not_crashes(spark, tmp_path):
     """The reference throws NumberFormatException mid-job on a bad line
     (exact/Exact2HopCount.java:55-59 parses unconditionally); the
@@ -208,64 +190,63 @@ def test_materialized_edges_csv_matches_derivation(spark):
     assert os.path.getmtime(path) == m1
 
 
-def test_fan_out_repartitions_small_local_scan(spark, tmp_path):
-    # a single small parquet file estimates to 1 scan split, far below
-    # the target — the RoundRobin repartition must still fire (this is
-    # the branch every local bench plan exercises)
+def _fan_out_input(spark, tmp_path, case):
+    if case == "in_memory":
+        return spark.createDataFrame([(i,) for i in range(20)], "id LONG")
+    p = str(tmp_path / case)
+    if case == "one_file":
+        spark.range(0, 1000).coalesce(1).write.parquet(p)
+    elif case == "two_files":
+        spark.range(0, 1000).repartition(2).write.parquet(p)
+    else:  # post_aggregate: 40 leaf files under a shuffle
+        spark.range(0, 1000).repartition(40).write.parquet(p)
+        return spark.read.parquet(p).groupBy((F.col("id") % 7).alias("id")).count()
+    return spark.read.parquet(p)
+
+
+@pytest.mark.parametrize(
+    "case, n",
+    [("one_file", None), ("in_memory", None), ("post_aggregate", None), ("two_files", 1)],
+)
+def test_fan_out_round_robins_to_core_count(spark, tmp_path, monkeypatch, case, n):
+    """``fan_out`` always adds exactly one round-robin exchange into the
+    session's core count, whatever its input: a one-file scan, an
+    in-memory frame, an aggregate's output, and a two-file scan on a
+    one-core session, whose own splits already reach the target; and it
+    keeps the rows."""
+    from pyspark import SparkContext
+
     from twitter_followers_patterns_mapreduce_spark.sources.readers import fan_out
 
-    p = str(tmp_path / "one_file")
-    spark.range(0, 1000).coalesce(1).write.parquet(p)
-    df = spark.read.parquet(p)
-    out = fan_out(df, 8)
-    assert out is not df
-    assert "repartition" in out._jdf.queryExecution().logical().toString().lower()
+    df = _fan_out_input(spark, tmp_path, case)
+    if n is None:
+        n = spark.sparkContext.defaultParallelism
+    else:
+        monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: n))
+    out = fan_out(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # Spark names a one-partition round robin SinglePartition
+    want = "SinglePartition" if n == 1 else f"RoundRobinPartitioning({n})"
+    assert plan.count("REPARTITION_BY_NUM") == 1, plan
+    assert f"Exchange {want}, REPARTITION_BY_NUM" in plan, plan
+    assert sorted(out.collect()) == sorted(df.collect())
 
 
-def test_fan_out_noop_when_scan_already_parallel_enough(spark, tmp_path):
-    # the guarded branch (round-11 verdict item): when the file-based
-    # scan estimate already reaches the target, fan_out must NOT insert
-    # a shuffle — at 100 TB the scan arrives well-split and a
-    # round-robin repartition of the fact projection is pure waste
-    from twitter_followers_patterns_mapreduce_spark.sources.readers import (
-        _estimated_scan_partitions,
-        fan_out,
-    )
+def test_get_spark_shuffle_partitions_follow_core_count(spark):
+    """Every ``get_spark`` call, a repeated one included, leaves the
+    session's shuffles at its core count; only ``extra_conf`` overrides
+    it."""
+    from twitter_followers_patterns_mapreduce_spark.session import get_spark
 
-    p = str(tmp_path / "two_files")
-    spark.range(0, 1000).repartition(2).write.parquet(p)
-    df = spark.read.parquet(p)
-    # two files charge 2 x openCostInBytes -> estimate >= 1
-    assert _estimated_scan_partitions(df) >= 1
-    out = fan_out(df, 1)
-    assert out is df  # unchanged frame, no Exchange added
-
-
-def test_bytes_conf_parses_spark_size_strings(spark):
-    # Spark 4 reports size confs with a unit suffix ('134217728b'), and a
-    # user may set one as '128m': both parse to bytes in Python
-    from twitter_followers_patterns_mapreduce_spark.sources.readers import _bytes_conf
-
-    key = "spark.sql.files.maxPartitionBytes"
-    assert spark.conf.get(key) == "134217728b"
-    assert _bytes_conf(spark, key, -1) == 128 * 1024 * 1024
-    assert _bytes_conf(spark, "spark.sql.files.openCostInBytes", -1) == 4 * 1024 * 1024
-    spark.conf.set(key, "128m")
+    key = "spark.sql.shuffle.partitions"
+    n = str(spark.sparkContext.defaultParallelism)
+    assert spark.conf.get(key) == n
     try:
-        assert _bytes_conf(spark, key, -1) == 128 * 1024 * 1024
+        assert get_spark(extra_conf={key: "3"}).conf.get(key) == "3"
     finally:
-        spark.conf.unset(key)
-    assert _bytes_conf(spark, "spark.graft.no.such.size", 7) == 7
-
-
-def test_fan_out_falls_back_for_fileless_frames(spark):
-    # in-memory frames have no file lineage: keep the old unconditional
-    # repartition (the estimate abstains rather than guessing)
-    from twitter_followers_patterns_mapreduce_spark.sources.readers import fan_out
-
-    df = spark.createDataFrame([(1,), (2,)], "x LONG")
-    out = fan_out(df, 4)
-    assert out is not df
+        again = get_spark()
+    assert again is spark
+    assert spark.conf.get(key) == n
 
 
 # ---------------------------------------------------------------------------
@@ -426,22 +407,3 @@ def test_staged_edges_non_local_master_reads_csv(spark, tmp_path, monkeypatch):
     assert edges_from_csv(spark, path) is not edges
     assert _staged_files() == before
     assert _edges(edges) == _duck_edges(path)
-
-
-def test_fan_out_repartitions_post_aggregate_frame(spark, tmp_path):
-    # an aggregate's output is partitioned by its shuffle, not by the leaf
-    # files: even when those files alone estimate to enough splits, the
-    # RoundRobin exchange must stay
-    from twitter_followers_patterns_mapreduce_spark.sources.readers import (
-        _estimated_scan_partitions,
-        fan_out,
-    )
-
-    p = str(tmp_path / "leaves")
-    # 40 files charge 40 x openCostInBytes (4 MiB) > one 128 MiB split
-    spark.range(0, 1000).repartition(40).write.parquet(p)
-    agg = spark.read.parquet(p).groupBy((F.col("id") % 7).alias("k")).count()
-    assert _estimated_scan_partitions(agg) >= 2
-    out = fan_out(agg, 2)
-    assert out is not agg
-    assert "RoundRobinPartitioning" in out._jdf.queryExecution().executedPlan().toString()

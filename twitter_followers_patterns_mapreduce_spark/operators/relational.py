@@ -145,8 +145,7 @@ def top_customers_by_revenue(
     sf0.001/0.01/0.1; 0.94 s after).  ``fan_out`` ahead of the
     projection: the single-row-group local scan otherwise runs the
     whole probe+partial-agg pipeline in ONE task (sources/readers.py
-    discipline; on a cluster the scan arrives well-split and this
-    rounds up to defaultParallelism)."""
+    discipline)."""
     from twitter_followers_patterns_mapreduce_spark.sources.readers import fan_out
 
     rows = fan_out(

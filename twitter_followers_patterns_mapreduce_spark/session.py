@@ -3,8 +3,13 @@
 The reference statically provisions per-task heaps in Hadoop XML
 (``config/pseudo/mapred-site.xml:26-38``: map 2048 MB / reduce 4096 MB).
 Spark's unified memory manager + AQE replace all of that; the only
-local-mode knobs that matter are core count, shuffle parallelism, and
-driver heap.
+local-mode knobs that matter are core count and driver heap.  The core
+count is also the session's one partition count: shuffles
+(``spark.sql.shuffle.partitions``), ``sources/readers.py::fan_out`` and
+``sources/readers.py::partitioned_on`` all use ``defaultParallelism``,
+which is the ``N`` of the ``local[N]`` master.  A fixed 32 shuffle
+partitions measured no different on either perfbench workload (4 vCPU:
+AQE had already coalesced the 32 to the same tasks per stage).
 
 At cluster scale the same plans run unchanged: AQE coalesces shuffle
 partitions, re-plans skew joins (Twitter follower graphs are power-law
@@ -36,7 +41,6 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "twitter-followers-patterns-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a local SparkSession with scale-aware defaults.
@@ -44,7 +48,15 @@ def get_spark(
     AQE is on so runtime statistics drive partition coalescing, skew-join
     splitting, and shuffle→broadcast join demotion — the dynamic
     equivalents of the reference's hand-chosen RS-join vs Rep-join
-    strategies (``README.md:79-81``).
+    strategies (``README.md:79-81``).  Shuffles start at
+    ``defaultParallelism`` partitions, on every call; an ``extra_conf``
+    value for ``spark.sql.shuffle.partitions`` wins over it.  The
+    builder carries the core count the master asks for, so a new
+    session gets it without a ``spark.conf`` call, which would build the
+    session state (~0.4 s on 4 vCPU) before the first query needs it;
+    only a context that reports another count (a reused session started
+    with other ``cpus``, or a JVM that counts ``local[*]`` differently
+    from ``os.cpu_count()``) has its count set after start.
 
     DataFrame call-site capture is off
     (``spark.python.sql.dataFrameDebugging.enabled=false``; see the
@@ -60,11 +72,11 @@ def get_spark(
     that carries it.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    n_shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+    cores = str(os.cpu_count() if cpus == "*" else cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(n_shuffle))
+        .config("spark.sql.shuffle.partitions", cores)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -79,5 +91,8 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    n = str(spark.sparkContext.defaultParallelism)
+    if n != cores and "spark.sql.shuffle.partitions" not in (extra_conf or {}):
+        spark.conf.set("spark.sql.shuffle.partitions", n)
     spark.sparkContext.setLogLevel("WARN")
     return spark

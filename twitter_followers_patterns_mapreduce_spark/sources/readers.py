@@ -258,113 +258,22 @@ def materialize_edges_csv(sf_dir: str) -> str:
     return path
 
 
-def edges_from_json(spark: SparkSession, path: str) -> DataFrame:
-    """JSON-lines edge source (``{"src": 1, "dst": 2}`` per line) with
-    the same explicit schema as the CSV path — no inference pass."""
-    return spark.read.schema(EDGE_SCHEMA).json(path)
-
-
-def edges_from_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC edge source — columnar alternative to parquet; schema comes
-    from the file footer, projected onto (src, dst)."""
-    return spark.read.orc(path).select(F.col("src").cast("long"), F.col("dst").cast("long"))
-
-
-#: Size-suffix exponents (powers of 1024), as ``JavaUtils.byteStringAsBytes``.
-_BYTE_UNITS = {"": 0, "b": 0, "k": 1, "kb": 1, "m": 2, "mb": 2, "g": 3, "gb": 3,
-               "t": 4, "tb": 4, "p": 5, "pb": 5}
-_BYTE_STRING = re.compile(r"([0-9]+)([a-z]*)")
-
-
-def _bytes_conf(spark: SparkSession, key: str, default: int) -> int:
-    """Read a size conf as bytes.  Spark 4 returns size confs with a unit
-    suffix (``'134217728b'``, or ``'128m'`` as set); the suffix is parsed
-    here with ``byteStringAsBytes``'s units rather than by a Py4J call
-    into ``JavaUtils`` (a package-reflection walk of 3-5 ms per read on
-    4 vCPU, paid twice per :func:`fan_out`).  Unreadable values fall back to
-    ``default``."""
-    try:
-        v = spark.conf.get(key)
-    except Exception:
-        return default
-    m = _BYTE_STRING.fullmatch(str(v).strip().lower())
-    if m is None or m.group(2) not in _BYTE_UNITS:
-        return default
-    return int(m.group(1)) * 1024 ** _BYTE_UNITS[m.group(2)]
-
-
-def _estimated_scan_partitions(df: DataFrame) -> int | None:
-    """Cheap lower-bound estimate of the scan parallelism feeding
-    ``df`` — from its input FILES, never from planning the query
-    (``df.rdd.getNumPartitions()`` pays a full physical-planning pass,
-    measured 1-2.3 s on the derived-edge pipeline; ``inputFiles()`` is
-    analysis-only).
-
-    Split arithmetic mirrors ``FilePartition.getFilePartitions``: each
-    file is charged max(its size, nothing) plus ``openCostInBytes``
-    when packed, and a split closes at ``maxPartitionBytes`` — so
-    #splits ≥ (Σ size + |files|·openCost) / maxPartitionBytes.  Local
-    ``file:`` URIs get exact sizes (one statvfs each); other schemes
-    fall back to the open-cost floor alone (|files|·openCost/maxPB),
-    which is the guaranteed packing minimum without any remote RPCs.
-    Returns None when the frame has no file inputs (in-memory,
-    post-shuffle-only lineage) — the caller keeps its old behavior.
-    """
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    spark = df.sparkSession
-    max_pb = _bytes_conf(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024)
-    open_cost = _bytes_conf(spark, "spark.sql.files.openCostInBytes", 4 * 1024 * 1024)
-    charged = 0
-    for f in files:
-        p = urlparse(f)
-        charged += open_cost
-        if p.scheme in ("file", ""):
-            try:
-                charged += os.path.getsize(unquote(p.path))
-            except OSError:
-                pass
-    return max(1, -(-charged // max(1, max_pb)))
-
-
-def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
-    """Round-robin repartition ahead of an expansion-heavy join or a
-    per-row-expensive projection stage — SKIPPED when the input scan
-    already arrives at least that parallel.
+def fan_out(df: DataFrame) -> DataFrame:
+    """Round-robin repartition into ``defaultParallelism`` partitions,
+    ahead of an expansion-heavy join or a per-row-expensive projection
+    stage.
 
     Scan partitioning is sized by INPUT bytes
     (``spark.sql.files.maxPartitionBytes``); a stage whose cost is
-    dominated by output amplification (a 2-hop path join emits ~40×
-    its input) or by heavy per-row expressions (128-permutation
-    minhash) needs partitioning sized by WORK instead.  Locally the
-    single-row-group testdata parquet pins such stages to one task —
-    this one small shuffle of the input unlocks all cores.
-
-    On a cluster the 100 TB scan already arrives well-split, and an
-    unconditional ``repartition(n)`` would insert a gratuitous full
-    round-robin shuffle of the projected columns (round-11 verdict):
-    when the file-based estimate of the scan's own parallelism
-    (:func:`_estimated_scan_partitions`) is already ≥ the target, the
-    frame is returned UNCHANGED.  The skip applies only to plain scans
-    (:func:`_plain_scan`): below a join, aggregate or repartition the
-    partitioning is the shuffle's, not the leaf files', so those frames
-    are always repartitioned.  Local single-file inputs estimate to 1
-    split, so they get the RoundRobin exchange; frames with no file
-    lineage keep the old unconditional behavior.  Joins on a key use
-    :func:`partitioned_on` instead.
+    dominated by output amplification (a co-follow self-join emits far
+    more rows than it reads) or by heavy per-row expressions
+    (128-permutation minhash) needs partitioning sized by WORK instead.
+    Locally the single-row-group testdata parquet pins such stages to
+    one task — this one small shuffle of the input unlocks all cores.
+    The repartition is unconditional, whatever the input's own split
+    count.  Joins on a key use :func:`partitioned_on` instead.
     """
-    n = parallelism or df.sparkSession.sparkContext.defaultParallelism
-    if _plain_scan(df):
-        est = _estimated_scan_partitions(df)
-        if est is not None and est >= n:
-            return df
-    return df.repartition(n)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def partitioned_on(df: DataFrame, key: str) -> DataFrame:
@@ -382,20 +291,3 @@ def partitioned_on(df: DataFrame, key: str) -> DataFrame:
     """
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
 
-
-#: analyzed-plan nodes that keep a scan's partitioning (narrow, no exchange)
-_NARROW_NODES = frozenset({"LogicalRelation", "Project", "Filter", "SubqueryAlias"})
-
-
-def _plain_scan(df: DataFrame) -> bool:
-    """True when the analyzed plan under ``df`` holds file scans and
-    narrow operators only — no Join, Aggregate, Repartition or anything
-    else whose output partitioning differs from the scan's."""
-    stack = [df._jdf.queryExecution().analyzed()]
-    while stack:
-        node = stack.pop()
-        if node.getClass().getSimpleName() not in _NARROW_NODES:
-            return False
-        children = node.children()
-        stack.extend(children.apply(i) for i in range(children.size()))
-    return True

@@ -284,19 +284,18 @@ def admit_apply_stream(
             # bootstrap pays its single shingle+md5 pass once too: both
             # state views derive from one checkpointed projection.
             # The bootstrap corpus arrives as a single-row-group local
-            # parquet (one task); a MODEST 8-way fan parallelizes the
-            # dominant md5+shingle projection without inflating every
-            # downstream micro-stage the way the rejected round-11
-            # 32-way fan of the PER-BATCH state did (16.5 -> 21.5 s) —
-            # this one runs once, on the largest input the pipeline
-            # ever hashes, and fan_out's scan-parallelism guard makes
-            # it a no-op on an already well-split cluster scan
+            # parquet (one task); fanning it out to the core count
+            # parallelizes the dominant md5+shingle projection.  Only
+            # the bootstrap is fanned: the rejected round-11 32-way fan
+            # of the PER-BATCH state inflated every downstream
+            # micro-stage (16.5 -> 21.5 s), while this one runs once,
+            # on the largest input the pipeline ever hashes
             from twitter_followers_patterns_mapreduce_spark.sources.readers import (
                 fan_out,
             )
 
             boot_state = _state_table(
-                fan_out(bootstrap, 8)
+                fan_out(bootstrap)
             ).localCheckpoint(eager=True)
             corpus = _sig_table(boot_state)
             corpus_bands = _band_rows(boot_state)

@@ -103,8 +103,11 @@ def triangles_apply_stream(
         else:
             old_edges, old_count = prev["edges"], prev["count"]
         # only genuinely-new edges count (and re-arrivals are no-ops);
-        # lazy checkpoint: D feeds the closure pass, U's tag and the
-        # union write
+        # D feeds the closure pass, U's tag and the union write, so it
+        # is checkpointed once.  eager=False does not make it lazy
+        # under AQE: the call itself runs the anti-join's map stages as
+        # Spark jobs, serially, before the two parallel state writes;
+        # only the final stage waits for the first action
         d = b.join(old_edges, ["src", "dst"], "left_anti").localCheckpoint(
             eager=False
         )

@@ -116,7 +116,13 @@ def run_available_now(
     the sf0.1 interval join: 32 inherited partitions → 5.2 s, 8 sized
     ones → 2.3 s, identical rows).  The count binds at the query's
     first start (it lives in the checkpoint), which is why it is set
-    around ``start()`` and restored after the drain."""
+    around ``start()`` and restored after the drain.
+
+    It stays an argument while every batch shuffle follows the core
+    count (``session.py``): that 2.2× is the number of state stores
+    each micro-batch commits, measured under a ``local[32]`` session,
+    so a count derived from ``defaultParallelism`` would bring the
+    cost back on exactly the hosts with many cores."""
     spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions is not None:
